@@ -69,7 +69,7 @@ def _events_pts(spark, sf_dir, parallel: bool = False) -> DataFrame:
         "lon", F.expr(O.EVENT_LON)
     ).withColumn("lat", F.expr(O.EVENT_LAT))
     if parallel:
-        from geomesa_spark.operators.dedup import _ensure_parallel
+        from geomesa_spark.plans.partitioning import _ensure_parallel
 
         e = _ensure_parallel(e)
     return index_points_df(e, "lon", "lat")
@@ -182,7 +182,7 @@ def q_equals_join_snap(spark, sf_dir):
         .withColumn("lat", F.floor(F.expr(O.EVENT_LAT) / 2.0) * 2.0)
         .select("event_id", "lon", "lat")
     )
-    from geomesa_spark.operators.dedup import _ensure_parallel
+    from geomesa_spark.plans.partitioning import _ensure_parallel
 
     # spread the single-split events scan below the point-WKB UDF (the
     # join exchange above it would otherwise leave 1M st_makePoint calls
@@ -374,7 +374,7 @@ def q_track_region_hits(spark, sf_dir):
     pure SQL over the identically-derived coordinates."""
     _init(spark)
     from geomesa_spark.functions.library import UDFS
-    from geomesa_spark.operators.dedup import _ensure_parallel
+    from geomesa_spark.plans.partitioning import _ensure_parallel
 
     # spread the single-split scan BEFORE the segment-WKB UDF chain: the
     # broadcast join preserves partitioning, so without this the segment

@@ -174,7 +174,7 @@ def mixed_dim_synth_job(spark, n_lines: int = 200_000, n_polys: int = 5_000) -> 
     return dt
 
 
-def minhash_synth_job(spark, n_docs: int = 100_000, stages: dict | None = None) -> float:
+def minhash_synth_job(spark, n_docs: int = 100_000) -> float:
     """Text-dedup scale probe: 100k synthetic ~260-char docs with ~5%
     planted near-duplicates through the full MinHash-LSH + exact-verify
     pipeline (the sf0.1 documents table is only 5k rows — latency-bound;
@@ -189,58 +189,15 @@ def minhash_synth_job(spark, n_docs: int = 100_000, stages: dict | None = None) 
     n = pairs.count()
     assert n >= n_docs // 20 - 8, n  # every planted pair found
     total = time.time() - t0
-    if stages is not None and not stages:
-        # per-stage decomposition (VERDICT r7 #5): mirror the gate's
-        # internals with checkpoints isolating each stage so round 9 can
-        # read kernel-vs-latency straight from the JSON. Recorded once
-        # (first run only); failures never fail the bench.
-        try:
-            import pyspark.sql.functions as _F
-
-            from geomesa_spark.operators.dedup import (
-                _ensure_parallel,
-                _est_prefilter,
-                _lsh_candidates,
-                _minhash_text_udf,
-                _pack_sig_udf,
-                canonicalize_exact,
-            )
-
-            t = time.time()
-            df = _ensure_parallel(canonicalize_exact(d, "text", "doc_id"))
-            txt = df.select(
-                "doc_id", _F.col("text").alias("_txt")
-            ).localCheckpoint(eager=False)
-            sig = (
-                txt.withColumn("_sig", _minhash_text_udf(128, 3)(_F.col("_txt")))
-                .filter(_F.col("_sig").isNotNull())
-                .withColumn("_sigb", _pack_sig_udf()(_F.col("_sig")))
-                .localCheckpoint(eager=False)
-            )
-            sig.write.format("noop").mode("overwrite").save()
-            stages["sig"] = round(time.time() - t, 3)
-            t = time.time()
-            cand = _lsh_candidates(
-                sig.select("doc_id", "_sig"), "doc_id", 128, 16, 2000
-            ).localCheckpoint(eager=False)
-            cand.write.format("noop").mode("overwrite").save()
-            stages["cand"] = round(time.time() - t, 3)
-            t = time.time()
-            _est_prefilter(cand, sig, "doc_id", 0.8, 128).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            stages["prefilter"] = round(time.time() - t, 3)
-        except Exception:
-            stages["err"] = -1.0
     return total
 
 
-def _probe_jobs(ann_stages: dict, mh_stages: dict | None = None) -> list[tuple[str, object]]:
+def _probe_jobs(ann_stages: dict) -> list[tuple[str, object]]:
     """Scale probes beyond the sf-dir gate queries (shared by the first
     pass and the session-end weather retry)."""
     return [
         ("ann_join_synth_200k", lambda s: ann_join_synth_job(s, stages=ann_stages)),
-        ("minhash_synth_100k", lambda s: minhash_synth_job(s, stages=mh_stages)),
+        ("minhash_synth_100k", minhash_synth_job),
         ("mixed_dim_synth", mixed_dim_synth_job),
     ]
 
@@ -332,50 +289,14 @@ def run_queries(spark) -> tuple[dict[str, float], dict[str, object]]:
             runs[name] = ts
         out[name] = min(ts)
 
-    # ngram_dedup sub-stage timings (VERDICT r6 #5): the gate is stage-
-    # latency-bound at sf0.1 (5k docs), so record where the walls are —
-    # sig = canonicalize + signature UDF; cand = + LSH banding/bucket join
-    # (the full gate time above adds the sig prefilter + text attach +
-    # exact verify). Decomposable from the JSON without a bisection.
-    try:
-        import pyspark.sql.functions as _F
-
-        from geomesa_spark.operators.dedup import (
-            _lsh_candidates,
-            _minhash_text_udf,
-            canonicalize_exact,
-        )
-
-        d = entry._read(spark, SF_DIR, "documents")
-        stages: dict[str, float] = {}
-        t0 = time.time()
-        txt = canonicalize_exact(d, "text", "doc_id", carry=("lang",)).select(
-            "doc_id", "lang", _F.col("text").alias("_txt")
-        )
-        sig = txt.withColumn("_sig", _minhash_text_udf(128, 3)(_F.col("_txt"))).filter(
-            _F.col("_sig").isNotNull()
-        )
-        sig.write.format("noop").mode("overwrite").save()
-        stages["sig"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        _lsh_candidates(sig.select("doc_id", "_sig"), "doc_id", 128, 16, None).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        stages["sig_plus_cand"] = round(time.time() - t0, 3)
-        runs["ngram_dedup_stages"] = stages
-    except Exception:
-        pass  # stage probe must never fail the bench
-
     ann_stages: dict[str, float] = {}
-    mh_stages: dict[str, float] = {}
-    for probe_name, probe in _probe_jobs(ann_stages, mh_stages):
+    for probe_name, probe in _probe_jobs(ann_stages):
         ts = [round(probe(spark), 3), round(probe(spark), 3)]
         if max(ts) / max(min(ts), 1e-9) > 1.5:
             ts.append(round(probe(spark), 3))
         runs[probe_name] = ts
         out[probe_name] = min(ts)
     runs["ann_join_synth_200k_stages"] = ann_stages
-    runs["minhash_synth_100k_stages"] = mh_stages
     return out, runs
 
 

@@ -716,7 +716,7 @@ def convex_hull_by(df, group_cols, geom_col: str = "geom"):
     # single-file reads arrive as one partition — spread the map-side fold
     # (skipped when the plan already carries an explicit repartition, e.g.
     # a caller that parallelized BELOW its geometry UDF — r9)
-    from ..operators.dedup import _ensure_parallel
+    from ..plans.partitioning import _ensure_parallel
 
     proj = _ensure_parallel(proj)
     schema = proj.schema

@@ -4,15 +4,17 @@ Exact (hash groupBy), n-gram Jaccard (MinHash-LSH candidate generation +
 exact verify), MinHash+LSH (shingle -> minhash -> band -> bucket join),
 SimHash (pigeonhole multi-block tables, full Hamming-<=h recall), and
 embedding-cosine near-dup (multi-table random-hyperplane LSH). All
-shuffle-aware: candidate generation is always a blocked/bucketed equi-join —
-never a cross join or an all-pairs-within-block join — so the plan scales
-with duplicate density, not n^2.
+shuffle-aware: candidate generation is always a blocked/bucketed equi-join
+or a per-bucket kernel — never a cross join — so the plan scales with
+duplicate density, not n^2.
 
-Scale notes (the three round-1 anti-patterns, fixed):
-- candidate pairs carry IDS ONLY through the bucket shuffle; signatures /
-  shingles / vectors are re-attached with plain (sort-merge or AQE-broadcast)
-  id joins — nothing document-sized is broadcast and nothing is persisted
-  (identical subtrees dedupe via Spark's ReusedExchange).
+Scale notes:
+- candidate pairs carry IDS ONLY through the bucket shuffle. The per-doc
+  payloads they are verified against (minhash sig blobs, texts) are
+  gathered to the driver ONCE and broadcast when the table fits
+  spark.geomesa.dedup.gatherMaxBytes (_gather); above that cap they are
+  re-attached to the pairs with plain id joins (_attach). Embedding pairs
+  are scored inside each LSH bucket, so vectors never ride a pair.
 - n-gram Jaccard generates candidates with MinHash banding (miss probability
   (1-t^r)^b) and runs the exact Jaccard only on candidates. Default (r=8,
   b=16): selective enough that a self-similar corpus (mass of pairs at
@@ -21,6 +23,10 @@ Scale notes (the three round-1 anti-patterns, fixed):
 - SimHash uses the pigeonhole construction: with (h+1) signature blocks, any
   pair within Hamming distance h agrees on at least one whole block, so
   bucketing each block separately gives FULL recall, not prefix-table luck.
+
+The Column-expression mirrors of the shingle, minhash and simhash kernels
+(SQL-mirrorable definitions the Arrow kernels are tested against) live in
+tests/dedup_mirrors.py; oracle.py holds their DuckDB counterparts.
 """
 
 from __future__ import annotations
@@ -31,72 +37,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..plans.partitioning import _ensure_parallel, _parse_bytes
+
 SIMHASH_BITS = 60  # md5-derived 60-bit signatures (15 hex chars -> ANSI-safe long)
 
 
-def _ensure_parallel(df: DataFrame) -> DataFrame:
-    """Single-file reads arrive as one partition; spread heavy per-row work.
-
-    Decides driver-side with NO `df.rdd` conversion (which forced a second
-    physical-planning pass per call, VERDICT r4/r5): a file-backed scan
-    whose Catalyst size estimate is under one split per core AND whose file
-    count is below the core count is the few-partition case — repartition
-    it (trivially cheap at that size). Non-file sources (mapInPandas synth,
-    in-memory) keep their caller-chosen partitioning, and big tables skip
-    the inputFiles() enumeration entirely via the stats guard — at 100 TB
-    the scan already yields thousands of splits."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        # already explicitly repartitioned somewhere in the plan (e.g. an
-        # upstream _ensure_parallel): inputFiles() would still report the
-        # few-file scan and a second exchange would be pure waste
-        if "Repartition" in df._jdf.queryExecution().logical().toString():
-            return df
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        per_core = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        if size < par * per_core and 0 < len(df.inputFiles()) < par:
-            return df.repartition(par)
-    except Exception:  # stats unavailable -> assume already parallel
-        pass
-    return df
-
-
-def _parse_bytes(v: str) -> int:
-    """Spark size-string -> bytes: handles '128m', '1g', '134217728b',
-    '128MB' (case-insensitive, optional trailing 'b'), not just a trailing
-    'b' (ADVICE r6 — a human-set '128m' silently disabled the repartition
-    heuristic via the blanket except above)."""
-    s = str(v).strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    mult = 1
-    if s and s[-1] in "kmgtp":
-        mult = 1024 ** ("kmgtp".index(s[-1]) + 1)
-        s = s[:-1]
-    return int(float(s) * mult)
-
-
-def shingles_col(text_col, k: int = 3):
-    """Distinct lowercase character k-shingles as a Column. NOTE: transform/
-    substring lambdas are INTERPRETED per element by Spark — this is the
-    SQL-mirrorable definition; the dedup hot paths shingle inside Arrow
-    batches instead (_minhash_text_udf / _exact_jaccard_udf compute the
-    identical distinct-k-gram sets in numpy/Python per batch)."""
-    t = F.lower(text_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
-            lambda i: F.substring(t, i, k),
-        )
-    )
-
-
 def _shingle_set(t: str, k: int) -> set:
-    """Python mirror of shingles_col: distinct k-grams of lower(t); texts
-    shorter than k yield the whole text (one shingle)."""
+    """Distinct k-grams of lower(t); texts shorter than k yield the whole
+    text (one shingle). The Column form is tests/dedup_mirrors.shingles_col."""
     t = t.lower()
     n = max(len(t) - k + 1, 1)
     return {t[i : i + k] for i in range(n)}
@@ -104,9 +52,12 @@ def _shingle_set(t: str, k: int) -> set:
 
 def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
     """text -> minhash signature with the shingling INSIDE the Arrow batch
-    (one Python pass per doc) — same hash family and same S8-packing as
-    _minhash_udf, so signatures are bit-identical to the Column-shingled
-    path, minus ~len(text) interpreted lambda evals per row."""
+    (one Python pass per doc). Hash family h_i(x) = (a_i*x + b_i) mod
+    (2^31-1) over each gram's first 8 utf-8 bytes packed into a uint64 and
+    folded to 31 bits (a, b, x < 2^31, so products stay inside uint64) —
+    bit-identical to the Column-shingled parity mirror
+    tests/dedup_mirrors.minhash_udf, minus ~len(text) interpreted lambda
+    evals per row."""
     rng = np.random.default_rng(seed)
     P = np.uint64((1 << 31) - 1)
     A = rng.integers(1, int(P), num_hashes, dtype=np.uint64)
@@ -129,15 +80,19 @@ def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
         # per-doc gather reads ~n_grams contiguous 128-element rows instead
         # of 128 strided column picks — ~27% kernel win, bit-identical
         # (bisected vs the r4 per-doc and r5 column-gather kernels at fixed
-        # conditions, scripts/bisect_minhash.py).
+        # conditions in BENCH.md).
         out: list = []
         gram_ix: dict = {}
         doc_idx: list = []
 
         def flush():
             if gram_ix:
+                # utf-8 encode explicitly: numpy's str -> "S8" cast is ASCII
+                # and raises on any other character
                 packed = np.frombuffer(
-                    np.asarray(list(gram_ix.keys()), dtype="S8").tobytes(),
+                    np.asarray(
+                        [g.encode("utf-8") for g in gram_ix], dtype="S8"
+                    ).tobytes(),
                     dtype=np.uint64,
                 )
                 x = ((packed >> np.uint64(31)) ^ packed) & P
@@ -175,9 +130,10 @@ def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
 def _exact_jaccard_udf(k: int = 3):
     """(text_a, text_b) -> EXACT distinct-k-shingle Jaccard, one batch pass.
     Identical math to size(array_intersect)/size(array_union) over
-    shingles_col arrays, but pairs carry ~300-byte strings through the
-    attach joins instead of ~300-element string arrays, and the set ops run
-    in Python per batch instead of interpreted per element."""
+    tests/dedup_mirrors.shingles_col arrays, but pairs carry ~300-byte
+    strings through the attach joins instead of ~300-element string arrays,
+    and the set ops run in Python per batch instead of interpreted per
+    element."""
     from pyspark.sql.types import DoubleType
 
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -207,29 +163,6 @@ def _exact_jaccard_udf(k: int = 3):
     return F.pandas_udf(f, DoubleType())
 
 
-def _sig_match_frac_udf(num_hashes: int):
-    """(sig_a, sig_b) -> matching-position fraction (the minhash Jaccard
-    estimator), one numpy pass per batch — replaces the per-pair interpreted
-    zip_with/aggregate over 128-element arrays in the candidate prefilter."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.full(len(a), np.nan)
-        ok = [
-            i
-            for i in range(len(a))
-            if a.iloc[i] is not None and b.iloc[i] is not None
-        ]
-        if ok:
-            A = np.stack([np.asarray(a.iloc[i], dtype=np.int64) for i in ok])
-            Bm = np.stack([np.asarray(b.iloc[i], dtype=np.int64) for i in ok])
-            out[ok] = (A == Bm).mean(axis=1)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
-
-
 def _pack_sig_udf():
     """array<long> minhash signature -> little-endian int32 binary blob.
     Signature values are < 2^31 (hashes mod P = 2^31-1), so int32 is exact.
@@ -252,10 +185,9 @@ def _pack_sig_udf():
 
 
 def _sig_match_frac_bin_udf(num_hashes: int):
-    """Binary-blob variant of _sig_match_frac_udf: (sigb_a, sigb_b) ->
-    matching-position fraction. One zero-copy frombuffer over the whole
-    batch instead of 2 x batch-size np.asarray(list) conversions — VALUE-
-    IDENTICAL to the array form (same ints compared for equality)."""
+    """(sigb_a, sigb_b) packed-sig blobs -> matching-position fraction (the
+    minhash Jaccard estimator). One zero-copy frombuffer over the whole
+    batch instead of 2 x batch-size np.asarray(list) conversions."""
     from pyspark.sql.types import DoubleType
 
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -479,7 +411,6 @@ def dedup_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 30,
-    fallback: str = "star",
 ) -> DataFrame:
     """Connected components of a near-duplicate pair graph -> (id, component)
     with component = min member id. Iterative min-label propagation: each
@@ -491,9 +422,13 @@ def dedup_components(
     favors the shape dedup graphs actually have. Each round is one shuffle
     on id; labels are localCheckpoint'd so lineage stays flat.
 
+    If the loop exhausts max_iter with labels still changing (a near-dup
+    chain longer than max_iter+1), the graph is handed to the diameter-
+    independent dedup_components_star.
+
     r9: when the edge list fits the gather cap (spark.geomesa.dedup.
-    gatherMaxBytes / 64 edges — the same size-guarded posture as the
-    verify gather), the components are solved with a driver-side
+    gatherMaxBytes at 64 bytes per edge — the same size-guarded _gather as
+    the verify payloads), the components are solved with a driver-side
     union-find instead: the distributed loop costs one join + aggregate +
     probe JOB per round, which is pure scheduling latency on a graph that
     fits in memory (measured sf1.0: 52,873 edges took ~5 s of rounds vs
@@ -502,9 +437,8 @@ def dedup_components(
     codepoint order). Above the cap the distributed loop is unchanged."""
     E0 = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     E0 = E0.localCheckpoint(eager=False)
-    n_edges = E0.count()
-    if n_edges <= _gather_cap_bytes(pairs.sparkSession) // 64:
-        rows = E0.collect()
+    edge_list = _gather(E0, 64 * E0.count())
+    if edge_list is not None:
         parent: dict = {}
 
         def find(x):
@@ -515,8 +449,7 @@ def dedup_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in rows:
-            u, v = row[0], row[1]
+        for u, v in zip(edge_list["src"].tolist(), edge_list["dst"].tolist()):
             if u not in parent:
                 parent[u] = u
             if v not in parent:
@@ -583,19 +516,8 @@ def dedup_components(
         if changed == 0:
             break
     else:
-        # loop exhausted max_iter with labels still changing: the graph has
-        # diameter > max_iter+1 (a long near-dup chain) and the labels so
-        # far would be WRONG. Default: hand the graph to the diameter-
-        # independent large-star/small-star formulation (O(log^2 n) rounds);
-        # fallback="raise" fails loudly instead for callers that treat a
-        # long-diameter dedup graph as a data bug.
-        if fallback == "star":
-            return dedup_components_star(pairs, id_a, id_b)
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds — the "
-            "pair graph has a path longer than max_iter; raise max_iter or "
-            "use dedup_components_star for this graph shape"
-        )
+        # labels still changing after max_iter rounds would be WRONG
+        return dedup_components_star(pairs, id_a, id_b)
     return labels
 
 
@@ -630,39 +552,6 @@ def _bucket_guard(keyed: DataFrame, key_cols: list[str], max_bucket: int | None)
 # ------------------------------------------------------------------ MinHash
 
 
-def _minhash_udf(num_hashes: int, seed: int = 42):
-    """shingle array -> minhash signature, fully vectorized numpy.
-
-    Shingles (short strings) pack directly into uint64 words via a fixed-width
-    bytes view; the hash family is h_i(x) = (a_i*x + b_i) mod (2^31-1) with
-    a,b,x < 2^31 so products stay inside uint64 — no object math, one matrix
-    op per document."""
-    rng = np.random.default_rng(seed)
-    P = np.uint64((1 << 31) - 1)
-    A = rng.integers(1, int(P), num_hashes, dtype=np.uint64)
-    B = rng.integers(0, int(P), num_hashes, dtype=np.uint64)
-
-    def mh(shingles: pd.Series) -> pd.Series:
-        # per-document tiles (num_hashes x ~300) stay inside L2 cache; a
-        # whole-batch flattened matrix is ~30x SLOWER (GB-sized uint64
-        # temporaries are memory-bandwidth bound) — measured, keep the loop
-        out = []
-        for arr in shingles:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            # pack each shingle's first 8 utf-8 bytes into a uint64
-            packed = np.frombuffer(
-                np.asarray(arr, dtype="S8").tobytes(), dtype=np.uint64
-            )
-            x = ((packed >> np.uint64(31)) ^ packed) & P  # fold to 31 bits
-            sig = ((A[:, None] * x[None, :] + B[:, None]) % P).min(axis=1)
-            out.append(sig.astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
-
-    return F.pandas_udf(mh, ArrayType(LongType()))
-
-
 def _lsh_candidates(
     sig: DataFrame,
     id_col: str,
@@ -670,9 +559,9 @@ def _lsh_candidates(
     bands: int,
     max_bucket: int | None = None,
     block_col: str | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
-    """(id, _sig) -> candidate id pairs via LSH banding. Only (id, band,
+    """(id, _sig) -> RAW candidate id pairs via LSH banding: a pair that
+    collides in several bands appears once per band. Only (id, band,
     bucket-hash) crosses the shuffle; the band self-join's two sides are the
     identical subplan, so Spark computes the exchange once (ReusedExchange).
     max_bucket (if set) drops degenerate buckets before the self-join —
@@ -707,7 +596,7 @@ def _lsh_candidates(
     bands_df = _bucket_guard(bands_df, key, max_bucket)
     a = bands_df.alias("a")
     b = bands_df.alias("b")
-    pairs = (
+    return (
         a.join(b, on=key)
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
@@ -715,13 +604,6 @@ def _lsh_candidates(
             F.col(f"b.{id_col}").alias("id_b"),
         )
     )
-    # dedup=False hands the RAW multi-band pair stream to a caller that
-    # filters per-pair (deterministically) BEFORE deduplicating: measured
-    # sf1.0 multiplicity is only 1.08x (78.0M raw vs 72.1M distinct), so
-    # deduplicating first costs a full 72M-row exchange to save 8% of the
-    # (cheap) estimate evaluations — filter-then-dedupe moves that exchange
-    # to the ~12M survivors (guide §2.3: shuffle fewer bytes).
-    return pairs.dropDuplicates(["id_a", "id_b"]) if dedup else pairs
 
 
 def _attach(cand: DataFrame, side: DataFrame, id_col: str, out_id: str) -> DataFrame:
@@ -762,63 +644,33 @@ _EST_MARGIN = 0.15
 _GATHER_MAX_BYTES = 256 << 20
 
 
-def _gather_cap_bytes(spark) -> int:
-    try:
-        return _parse_bytes(spark.conf.get("spark.geomesa.dedup.gatherMaxBytes"))
-    except Exception:
-        return _GATHER_MAX_BYTES
-
-
-def _collect_to_pandas(df: DataFrame) -> pd.DataFrame:
-    """Driver-side gather via Arrow (guide §6: toPandas with Arrow is
-    orders of magnitude faster than the row-pickle collect path — the
-    difference is ~2 s per bench run on a 100k-doc sig table)."""
+def _gather(df: DataFrame, nbytes: int, id_col: str | None = None):
+    """The driver gather behind every size-guarded dedup fork: None when
+    `nbytes` (the caller's byte estimate of `df`) exceeds the cap
+    spark.geomesa.dedup.gatherMaxBytes; else `df` as pandas through Arrow
+    (guide §6: the row-pickle collect of a 100k-doc sig table costs ~2 s
+    more) — or None again when `id_col` is set and repeats an id (the
+    attach joins keep duplicate-id semantics)."""
     spark = df.sparkSession
+    try:
+        cap = _parse_bytes(spark.conf.get("spark.geomesa.dedup.gatherMaxBytes"))
+    except Exception:
+        cap = _GATHER_MAX_BYTES
+    if nbytes > cap:
+        return None
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key, None)
     spark.conf.set(key, "true")
     try:
-        return df.toPandas()
+        pdf = df.toPandas()
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-
-
-def _collect_sig_table(sig: DataFrame, id_col: str, num_hashes: int):
-    """(ids Index, int32 sig matrix) broadcast when the per-doc sig table
-    fits the gather cap, else None (callers fall back to attach joins)."""
-    spark = sig.sparkSession
-    n = sig.count()
-    if n == 0 or n * 4 * num_hashes > _gather_cap_bytes(spark):
+    if id_col is not None and pdf[id_col].duplicated().any():
         return None
-    pdf = _collect_to_pandas(sig.select(id_col, "_sigb"))
-    ids = pd.Index(pdf[id_col])
-    if ids.has_duplicates:
-        return None  # attach-join semantics needed for duplicate ids
-    M = np.frombuffer(b"".join(bytes(v) for v in pdf["_sigb"]), dtype="<i4").reshape(
-        len(pdf), num_hashes
-    )
-    return spark.sparkContext.broadcast((ids, M))
-
-
-def _collect_text_table(txt: DataFrame, id_col: str, text_col: str = "_txt"):
-    """(ids Index, object array of texts) broadcast when the text table fits
-    the gather cap, else None."""
-    spark = txt.sparkSession
-    stats = txt.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.length(text_col)).alias("b")
-    ).first()
-    n, b = stats["n"] or 0, stats["b"] or 0
-    if n == 0 or n * 64 + b > _gather_cap_bytes(spark):
-        return None
-    pdf = _collect_to_pandas(txt.select(id_col, text_col))
-    ids = pd.Index(pdf[id_col])
-    if ids.has_duplicates:
-        return None
-    texts = pdf[text_col].to_numpy(dtype=object)
-    return spark.sparkContext.broadcast((ids, texts))
+    return pdf
 
 
 def _gather_ix(ids: pd.Index, s: pd.Series) -> np.ndarray:
@@ -918,8 +770,15 @@ def _exact_verify(
     """Exact shingle-Jaccard verification of id-only candidate pairs ->
     (id_a, id_b, jaccard >= threshold). Gather path when the text table fits
     the cap (pairs never carry texts); attach-join path otherwise."""
-    bc = _collect_text_table(txt, id_col)
-    if bc is not None:
+    slim = txt.select(id_col, "_txt")
+    stats = txt.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("_txt")).alias("b")
+    ).first()
+    table = _gather(slim, stats["n"] * 64 + (stats["b"] or 0), id_col)
+    if table is not None:
+        bc = txt.sparkSession.sparkContext.broadcast(
+            (pd.Index(table[id_col]), table["_txt"].to_numpy(dtype=object))
+        )
         # local sort clusters each partition's pairs by partner id so the
         # gather kernel's run-grouping amortizes (row order is not part of
         # the result contract; the pair SET is unchanged)
@@ -933,7 +792,6 @@ def _exact_verify(
         return cand.select("id_a", "id_b", jac.alias("jaccard")).filter(
             F.col("jaccard") >= threshold
         )
-    slim = txt.select(id_col, "_txt")
     cand = _attach(cand, slim, id_col, "id_a")
     cand = _attach(cand, slim, id_col, "id_b")
     jac = _exact_jaccard_udf(k)(F.col("_txt_id_a"), F.col("_txt_id_b"))
@@ -946,48 +804,105 @@ def _est_prefilter(
     cand: DataFrame,
     sig: DataFrame,
     id_col: str,
-    threshold: float,
+    min_est: float,
     num_hashes: int,
-    cand_raw: bool = False,
+    keep_est: bool = False,
 ) -> DataFrame:
-    """Sig-only prefilter BEFORE any text movement. Two-phase on purpose: a
-    fused single attach (sig+txt per side) was tried (r7) and measured 2.5x
-    SLOWER on the minhash gate (scripts/bisect_attach.py). r9: when the
-    per-doc sig table fits the gather cap the estimate runs on ID-ONLY pairs
-    against the broadcast sig matrix (no attach joins at all — at sf1.0 the
-    two sig attaches alone shuffled ~72 M pairs x 1 KB); the attach path
-    remains the above-cap fallback.
-
-    cand_raw=True marks a NON-deduplicated multi-band pair stream
-    (_lsh_candidates dedup=False): the estimate is per-pair deterministic,
-    so filtering the copies first and deduplicating the survivors is
-    set-identical to dedupe-then-filter, and moves the dedupe exchange from
-    the full candidate volume to the survivors."""
-    bc = _collect_sig_table(sig, id_col, num_hashes)
-    if bc is not None:
-        # asNondeterministic pins the est filter where it stands — a
-        # deterministic UDF predicate could be re-ordered around the
-        # upstream dedupe/join by the optimizer
+    """RAW multi-band candidate pairs (_lsh_candidates) -> distinct
+    (id_a, id_b) with the minhash estimate >= min_est, plus the estimate as
+    `est_jaccard` when keep_est. Sig-only, BEFORE any text movement: a fused
+    single attach (sig+txt per side) was measured 2.5x SLOWER on the
+    minhash gate (r7). When the per-doc sig table
+    fits the gather cap the estimate runs on ID-ONLY pairs against the
+    broadcast sig matrix (no attach joins at all — at sf1.0 the two sig
+    attaches alone shuffled ~72 M pairs x 1 KB), and the raw copies are
+    filtered FIRST: the estimate is per-pair deterministic, so filter-then-
+    dedupe is set-identical to dedupe-then-filter, and the dedupe exchange
+    moves from the full candidate volume (measured sf1.0 multiplicity only
+    1.08x: 78.0M raw vs 72.1M distinct) to the ~12M survivors. Above the cap
+    the pairs are deduplicated, then the sig blobs attached per side."""
+    sigs = sig.select(id_col, "_sigb")
+    table = _gather(sigs, 4 * num_hashes * sig.count(), id_col)
+    if table is None:
+        cand = cand.dropDuplicates(["id_a", "id_b"])
+        cand = _attach(cand, sigs, id_col, "id_a")
+        cand = _attach(cand, sigs, id_col, "id_b")
+        est = _sig_match_frac_bin_udf(num_hashes).asNondeterministic()(
+            F.col("_sigb_id_a"), F.col("_sigb_id_b")
+        )
+    else:
+        M = np.frombuffer(b"".join(map(bytes, table["_sigb"])), dtype="<i4")
+        bc = sig.sparkSession.sparkContext.broadcast(
+            (pd.Index(table[id_col]), M.reshape(len(table), num_hashes))
+        )
         est = _est_match_frac_gather_udf(bc, num_hashes).asNondeterministic()(
             F.col("id_a"), F.col("id_b")
         )
-        out = cand.filter(est >= threshold - _EST_MARGIN).select("id_a", "id_b")
-        if cand_raw:
-            # partition the dedupe by id_b alone: a subset of the dedupe key
-            # still co-locates every copy of a pair (same exchange count),
-            # and it clusters each partition by PARTNER so the exact-verify
-            # kernel's run-grouping amortizes over ~hundreds of pairs
-            out = out.repartition("id_b").dropDuplicates(["id_a", "id_b"])
+    # asNondeterministic pins the estimate where it stands: it is neither
+    # evaluated twice per row nor re-ordered around the dedupe
+    if keep_est:
+        out = cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
+            F.col("est_jaccard") >= min_est
+        )
+    else:
+        out = cand.filter(est >= min_est).select("id_a", "id_b")
+    if table is None:
         return out
-    if cand_raw:
-        cand = cand.dropDuplicates(["id_a", "id_b"])
-    sigs = sig.select(id_col, "_sigb")
-    pre = _attach(cand, sigs, id_col, "id_a")
-    pre = _attach(pre, sigs, id_col, "id_b")
-    est = _sig_match_frac_bin_udf(num_hashes)(
-        F.col("_sigb_id_a"), F.col("_sigb_id_b")
+    # partition the dedupe by id_b alone: a subset of the dedupe key still
+    # co-locates every copy of a pair (same exchange count), and it clusters
+    # each partition by PARTNER so the exact-verify kernel's run-grouping
+    # amortizes over ~hundreds of pairs
+    return out.repartition("id_b").dropDuplicates(["id_a", "id_b"])
+
+
+def _minhash_pairs(
+    df: DataFrame,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    k: int,
+    text_col: str,
+    id_col: str,
+    verify: str,
+    canonicalize: bool,
+    max_bucket: int | None,
+    block_col: str | None,
+) -> DataFrame:
+    """The MinHash-LSH pipeline behind minhash_lsh_pairs and
+    ngram_jaccard_pairs: canonicalize -> signatures -> raw LSH candidates
+    -> estimate filter -> (verify='exact') exact shingle-Jaccard verify."""
+    keep = [id_col] + ([block_col] if block_col else [])
+    if canonicalize:
+        df = canonicalize_exact(df, text_col, id_col, carry=tuple(keep[1:]))
+    df = _ensure_parallel(df)
+    # shingling happens INSIDE the signature/verify UDF batches — only the
+    # ~300-byte text (not a ~len(text)-element shingle array) is carried,
+    # and no interpreted transform/substring lambdas run per row.
+    # localCheckpoint cuts the lineage so the minhash work runs ONCE, not
+    # once per downstream branch (candidates + each attach side); the
+    # materialized blocks are GC-cleaned with the plan — no persist leak
+    txt = df.select(*keep, F.col(text_col).alias("_txt")).localCheckpoint(
+        eager=False
     )
-    return pre.filter(est >= threshold - _EST_MARGIN).select("id_a", "id_b")
+    sig = (
+        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
+        .filter(F.col("_sig").isNotNull())
+        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
+        .localCheckpoint(eager=False)
+    )
+    # block_col joins the LSH bucket key: cross-block pairs never form, so
+    # the est prefilter / text attach / exact verify all run on same-block
+    # volume only (r8 measurement: 75% of global candidates were cross-lang)
+    cand = _lsh_candidates(
+        sig.select(id_col, "_sig", *keep[1:]),
+        id_col, num_hashes, bands, max_bucket, block_col=block_col,
+    )
+    if verify != "exact":
+        return _est_prefilter(
+            cand, sig, id_col, threshold, num_hashes, keep_est=True
+        )
+    cand = _est_prefilter(cand, sig, id_col, threshold - _EST_MARGIN, num_hashes)
+    return _exact_verify(cand, txt, id_col, k, threshold)
 
 
 def minhash_lsh_pairs(
@@ -1020,55 +935,9 @@ def minhash_lsh_pairs(
     10^6 (pairs among identical docs are exact_dedup's O(cluster) output,
     not emitted here). max_bucket drops residual degenerate buckets — see
     _bucket_guard."""
-    if canonicalize:
-        df = canonicalize_exact(df, text_col, id_col)
-    df = _ensure_parallel(df)
-    # shingling happens INSIDE the signature/verify UDF batches — only the
-    # ~300-byte text (not a ~len(text)-element shingle array) is carried,
-    # and no interpreted transform/substring lambdas run per row.
-    # localCheckpoint cuts the lineage so the minhash work runs ONCE, not
-    # once per downstream branch (candidates + each attach side); the
-    # materialized blocks are GC-cleaned with the plan — no persist leak
-    txt = df.select(F.col(id_col), F.col(text_col).alias("_txt")).localCheckpoint(
-        eager=False
-    )
-    sig = (
-        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
-        .filter(F.col("_sig").isNotNull())
-        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
-        .localCheckpoint(eager=False)
-    )
-    cand = _lsh_candidates(
-        sig.select(id_col, "_sig"), id_col, num_hashes, bands, max_bucket,
-        dedup=False,
-    )
-
-    if verify == "exact":
-        cand = _est_prefilter(
-            cand, sig, id_col, threshold, num_hashes, cand_raw=True
-        )
-        return _exact_verify(cand, txt, id_col, k, threshold)
-    bc = _collect_sig_table(sig, id_col, num_hashes)
-    if bc is not None:
-        est = _est_match_frac_gather_udf(bc, num_hashes).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-        # est is identical for every multi-band copy of a pair: filter the
-        # raw stream, dedupe the survivors (set-identical, smaller exchange)
-        return (
-            cand.select("id_a", "id_b", est.alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold)
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    sigs = sig.select(id_col, "_sigb")
-    cand = _attach(cand, sigs, id_col, "id_a")
-    cand = _attach(cand, sigs, id_col, "id_b")
-    est = _sig_match_frac_bin_udf(num_hashes)(
-        F.col("_sigb_id_a"), F.col("_sigb_id_b")
-    )
-    return cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
-        F.col("est_jaccard") >= threshold
+    return _minhash_pairs(
+        df, threshold, num_hashes, bands, k, text_col, id_col, verify,
+        canonicalize, max_bucket, block_col=None,
     )
 
 
@@ -1098,103 +967,28 @@ def ngram_jaccard_pairs(
     (if set) additionally restricts pairs to equal block values (e.g.
     same-language dedup). canonicalize/max_bucket: duplicate-cluster safety,
     see minhash_lsh_pairs."""
-    if canonicalize:
-        df = canonicalize_exact(
-            df, text_col, id_col, carry=(block_col,) if block_col else ()
-        )
-    df = _ensure_parallel(df)
-    keep = [id_col] + ([block_col] if block_col else [])
-    txt = df.select(*keep, F.col(text_col).alias("_txt")).localCheckpoint(
-        eager=False
+    return _minhash_pairs(
+        df, threshold, num_hashes, bands, k, text_col, id_col, "exact",
+        canonicalize, max_bucket, block_col,
     )
-    sig = (
-        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
-        .filter(F.col("_sig").isNotNull())
-        .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
-        .localCheckpoint(eager=False)
-    )
-    # block_col joins the LSH bucket key: cross-block pairs never form, so
-    # the est prefilter / text attach / exact verify all run on same-block
-    # volume only (r8 measurement: 75% of global candidates were cross-lang)
-    cand = _lsh_candidates(
-        sig.select(id_col, "_sig", *([block_col] if block_col else [])),
-        id_col, num_hashes, bands, max_bucket, block_col=block_col,
-        dedup=False,
-    )
-    cand = _est_prefilter(cand, sig, id_col, threshold, num_hashes, cand_raw=True)
-    return _exact_verify(cand, txt, id_col, k, threshold)
 
 
 # ------------------------------------------------------------------ SimHash
 
 
-def token_hashes_col(text_col):
-    """Whitespace tokens -> 60-bit md5-derived hashes (array<long>). md5 is
-    engine-independent (identical hex in Spark and DuckDB), so signatures are
-    verifiable against an independent SQL engine — unlike xxhash64. 15 hex
-    chars = 60 bits keeps the ANSI long cast overflow-free."""
-    tokens = F.split(F.lower(text_col), " ")
-    return F.transform(
-        tokens, lambda t: F.conv(F.substring(F.md5(t), 3, 15), 16, 10).cast("long")
-    )
-
-
-def simhash_from_hashes(hash_arr, bits: int = SIMHASH_BITS):
-    """token-hash array -> simhash signature: bit b = sign of sum over tokens
-    of (+-1 by token-hash bit b). Pure built-ins (one aggregate per bit over
-    the PRE-COMPUTED hash array — tokens are hashed once, not once per bit)."""
-    def bit(b):
-        contrib = F.aggregate(
-            hash_arr,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + (F.shiftright(h, b).bitwiseAND(F.lit(1).cast("long")) * 2 - 1),
-        )
-        return F.when(contrib > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ) * F.lit(1 << b).cast("long")
-
-    return sum([bit(b) for b in range(bits)], F.lit(0).cast("long"))
-
-
-def simhash_col(text_col, bits: int = SIMHASH_BITS):
-    """Convenience: text -> simhash in one Column (hashes computed inline)."""
-    return simhash_from_hashes(token_hashes_col(text_col), bits)
-
-
-def _simhash_udf(bits: int = SIMHASH_BITS):
-    """token-hash array -> signature via numpy (per-doc tiles). Pure integer
-    math — BIT-IDENTICAL to simhash_from_hashes, but one Arrow pass instead
-    of `bits` interpreted aggregate-lambdas per row (the hot path for
-    simhash_pairs; the Column form remains the SQL-mirrorable definition)."""
-    from pyspark.sql.types import LongType
-
-    shifts = np.arange(bits, dtype=np.int64)
-
-    def f(harrs):  # no hints (local-import annotations trap)
-        out = np.full(len(harrs), 0, dtype=np.int64)
-        for i, h in enumerate(harrs):
-            if h is None or len(h) == 0:
-                continue
-            hv = np.asarray(h, dtype=np.int64)
-            bitm = (hv[:, None] >> shifts) & 1  # (tokens, bits)
-            contrib = bitm.sum(axis=0) * 2 - len(hv)  # sum of +-1 per bit
-            out[i] = int(((contrib > 0).astype(np.int64) << shifts).sum())
-        return pd.Series(out)
-
-    return F.pandas_udf(f, LongType())
-
-
 def _simhash_text_udf(bits: int = SIMHASH_BITS):
-    """text -> simhash signature with tokenization + md5 INSIDE the Arrow
-    batch (r9): token_hashes_col's transform() lambda is interpreted PER
-    TOKEN by Spark (~40 tokens/doc), and the hash array then crosses Arrow
-    as list<long>. Here only the text crosses; hashlib.md5 over the UTF-8
-    token bytes with int(hex[2:17], 16) is VALUE-IDENTICAL to
-    conv(substring(md5(t), 3, 15), 16, 10)::long (same digest, same hex
-    window), Python str.lower()/split(' ') match lower()/split on the
-    engine's corpora (ASCII; split keeps empty tokens in both). Token
-    hashes are memoized per worker (natural-language tokens repeat)."""
+    """text -> simhash signature: bit b = sign of the sum over whitespace
+    tokens of (+-1 by token-hash bit b), with 60-bit md5-derived token hashes
+    (md5 is engine-independent, so signatures are verifiable against DuckDB
+    — unlike xxhash64; 15 hex chars keep the ANSI long cast overflow-free).
+    Tokenization + md5 run INSIDE the Arrow batch (r9): the Column mirror
+    (tests/dedup_mirrors.simhash_col) interprets a transform() lambda PER
+    TOKEN (~40 tokens/doc). hashlib.md5 over the UTF-8 token bytes with
+    int(hex[2:17], 16) is VALUE-IDENTICAL to conv(substring(md5(t), 3, 15),
+    16, 10)::long (same digest, same hex window), Python str.lower()/
+    split(' ') match lower()/split on the engine's corpora (ASCII; split
+    keeps empty tokens in both). Token hashes are memoized per worker
+    (natural-language tokens repeat)."""
     import hashlib
 
     from pyspark.sql.types import LongType
@@ -1306,9 +1100,12 @@ def embedding_cosine_pairs(
     join + exact cosine verify. A pair at angular similarity p collides in
     >= 1 of `tables` with prob 1-(1-p^bits)^tables. Hyperplanes are literal
     sign vectors (similarity.hyperplane_signs) — deterministic and
-    SQL-expressible, so the full pipeline is oracle-checkable. Candidates
-    carry ids only; vectors re-attach via plain id joins. max_bucket drops
-    degenerate buckets (e.g. a zero-vector cluster) — see _bucket_guard."""
+    SQL-expressible, so the full pipeline is oracle-checkable. Pairs are
+    enumerated and scored INSIDE each (table, bucket) group, so vectors
+    never ride a candidate pair; only pairs at or above threshold leave the
+    kernel. Rows with a null id are dropped and equal ids never pair (the
+    `a.id < b.id` semantics of the join form). max_bucket drops degenerate
+    buckets (e.g. a zero-vector cluster) — see _bucket_guard."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from .similarity import _vec_dim, hyperplane_signs, rp_buckets_udf
@@ -1329,7 +1126,7 @@ def embedding_cosine_pairs(
     # filter-then-dedupe == dedupe-then-filter) drop afterwards on the tiny
     # survivor set. Memory is bounded by the largest bucket (the guard /
     # lsh_bits control it), pair enumeration is chunked.
-    keyed = df.select(
+    keyed = df.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col),
         F.col(vec_col).alias("_v"),
         F.posexplode(rp_buckets_udf(signs)(F.col(vec_col))).alias("tbl", "bkt"),
@@ -1368,7 +1165,7 @@ def embedding_cosine_pairs(
                     [np.arange(r + 1, m, dtype=np.int64) for r, _ in chunk_rows]
                 )
                 cos = (V[iu] * V[ju]).sum(axis=1) / (norms[iu] * norms[ju])
-                keep = cos >= thr
+                keep = (cos >= thr) & (ids[iu] != ids[ju])
                 if keep.any():
                     out_a.append(ids[iu[keep]])
                     out_b.append(ids[ju[keep]])

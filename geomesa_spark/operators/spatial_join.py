@@ -1137,7 +1137,7 @@ def spatial_join(
     # candidate pairs, took 23 s single-threaded). _ensure_parallel
     # round-robins only the few-split case; true at-scale inputs arrive
     # with thousands of splits and are left untouched (guide §2).
-    from .dedup import _ensure_parallel
+    from ..plans.partitioning import _ensure_parallel
 
     left = _ensure_parallel(left)
     if broadcast is not True:
@@ -1419,7 +1419,7 @@ def distance_join(
 
     Returns left columns + right columns (right renamed `r_<name>` on
     clash) + dist_m."""
-    from .dedup import _ensure_parallel
+    from ..plans.partitioning import _ensure_parallel
     from .knn import haversine_col
 
     # single-split scans otherwise run the (interpreted, per-element) cell

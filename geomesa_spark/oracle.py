@@ -119,8 +119,10 @@ def rp_bucket_sql(vec: str, signs_2d) -> str:
 
 
 def token_hashes_sql(text: str) -> str:
-    """Whitespace tokens -> 60-bit md5-derived hashes; mirrors
-    dedup.token_hashes_col (Spark conv(substring(md5(t),3,15),16,10))."""
+    """Whitespace tokens -> 60-bit md5-derived hashes; mirrors the token
+    hashes of dedup._simhash_text_udf and its Column form
+    tests/dedup_mirrors.token_hashes_col (Spark conv(substring(md5(t),3,15),
+    16,10))."""
     th = (
         "list_sum([(strpos('0123456789abcdef', substr(md5(__tk), 2+__hj, 1)) - 1)::BIGINT"
         " << (4*(15-__hj)) for __hj in range(1, 16)])"
@@ -129,7 +131,8 @@ def token_hashes_sql(text: str) -> str:
 
 
 def simhash_from_hashes_sql(hashes: str, bits: int = 60) -> str:
-    """token-hash list -> simhash signature; mirrors dedup.simhash_from_hashes.
+    """token-hash list -> simhash signature; mirrors
+    tests/dedup_mirrors.simhash_from_hashes.
     `hashes` should be a (CTE) column so tokens are hashed once, not per bit."""
     return (
         f"cast(list_sum([case when "

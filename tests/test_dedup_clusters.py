@@ -16,17 +16,16 @@ min-member-id) instead of raw pairs.
 
 import pandas as pd
 import pytest
+from dedup_mirrors import minhash_udf, shingles_col
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators.dedup import (
     _lsh_candidates,
-    _minhash_udf,
     canonicalize_exact,
     dedup_components,
     exact_canonical_map,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    shingles_col,
     simhash_pairs,
 )
 
@@ -63,11 +62,12 @@ def test_candidate_pairs_o_of_cluster_post_canonicalization(spark, planted):
     O(distinct texts), not O(cluster^2) — 10k identical docs would otherwise
     emit ~50M candidate pairs."""
     canon = canonicalize_exact(planted)
-    mh = _minhash_udf(128)
+    mh = minhash_udf(128)
     sig = canon.select(
         "doc_id", shingles_col(F.col("text"), 3).alias("_sh")
     ).withColumn("_sig", mh(F.col("_sh")))
-    n_cand = _lsh_candidates(sig.select("doc_id", "_sig"), "doc_id", 128, 16).count()
+    cand = _lsh_candidates(sig.select("doc_id", "_sig"), "doc_id", 128, 16)
+    n_cand = cand.distinct().count()
     # 22 distinct texts -> at most 22*21/2 = 231 pairs even if every band
     # collided; in practice only the near-dup pair collides
     assert n_cand <= 231
@@ -75,6 +75,30 @@ def test_candidate_pairs_o_of_cluster_post_canonicalization(spark, planted):
         planted, threshold=0.8, verify="exact", canonicalize=True
     ).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {("c00000", "near-1")}
+
+
+def test_minhash_text_kernel_matches_column_mirror(spark):
+    """The Arrow text kernel (shingling inside the batch) emits exactly the
+    signatures of the Column mirror (shingles_col + per-doc minhash), on
+    ASCII and on 2-, 3- and 4-byte utf-8 text alike."""
+    from geomesa_spark.operators.dedup import _minhash_text_udf
+
+    texts = [
+        ("a", BASE),
+        ("b", "ab"),
+        ("c", "un café au lait chaud, s'il vous plaît"),
+        ("d", "die straße ist groß und schön"),
+        ("e", "καλημέρα κόσμε"),
+        ("f", "東京都の天気は晴れです🌞"),
+    ]
+    df = spark.createDataFrame(texts, "doc_id string, text string")
+    got = df.select(
+        "doc_id",
+        _minhash_text_udf(128, 3)(F.col("text")).alias("kernel"),
+        minhash_udf(128)(shingles_col(F.col("text"), 3)).alias("mirror"),
+    ).collect()
+    assert len(got) == len(texts)
+    assert all(r.kernel == r.mirror for r in got)
 
 
 def test_ngram_canonicalize_with_block(spark, planted):
@@ -247,15 +271,12 @@ def test_dedup_components_nonconvergence_handling(spark):
     # this test targets) by zeroing the gather cap
     spark.conf.set("spark.geomesa.dedup.gatherMaxBytes", "0")
     try:
-        # explicit fallback="raise" fails loudly instead of returning wrong labels
-        with pytest.raises(RuntimeError, match="did not converge"):
-            dedup_components(chain, max_iter=2, fallback="raise").collect()
-        # the default falls back to the diameter-independent star formulation
+        # non-convergence falls back to the diameter-independent star formulation
         labels = dedup_components(chain, max_iter=2)
         got = {(r.id, r.component) for r in labels.collect()}
         assert got == {(f"n{i:02d}", "n00") for i in range(13)}
         # and with enough rounds plain propagation converges to the same answer
-        labels = dedup_components(chain, max_iter=30, fallback="raise")
+        labels = dedup_components(chain, max_iter=30)
         comps = {r.component for r in labels.collect()}
         assert comps == {"n00"}
     finally:

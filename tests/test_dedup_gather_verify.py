@@ -84,7 +84,9 @@ def test_ngram_gather_matches_attach(spark, texts):
 def test_jaccard_gather_nul_and_short_texts(spark):
     """NUL-bearing texts force the object-dtype shingle arrays (U-dtype
     would merge 'ab\\0' with 'ab'); shorter-than-k texts shingle to the
-    whole text. Both must agree with the attach path exactly."""
+    whole text; multi-byte utf-8 grams (2-, 3- and 4-byte characters) pack
+    into the signature by their first 8 utf-8 bytes. Both must agree with
+    the attach path exactly."""
     rows = [
         ("a1", "ab\x00cd ab\x00ce", "en"),
         ("a2", "ab\x00cd ab\x00cf", "en"),
@@ -92,6 +94,14 @@ def test_jaccard_gather_nul_and_short_texts(spark):
         ("b2", "ab", "en"),
         ("c1", "abcd abce xyz", "en"),
         ("c2", "abcd abce xyw", "en"),
+        ("d1", "un café au lait chaud, s'il vous plaît", "fr"),
+        ("d2", "un café au lait chaud, s'il vous plaît!", "fr"),
+        ("e1", "die straße ist groß und schön", "de"),
+        ("e2", "die straße ist groß und schön.", "de"),
+        ("f1", "καλημέρα κόσμε, τι κάνεις σήμερα", "el"),
+        ("f2", "καλημέρα κόσμε, τι κάνεις σήμερα;", "el"),
+        ("g1", "東京都の天気は晴れです。明日も晴れるでしょう", "ja"),
+        ("g2", "東京都の天気は晴れです。明日も晴れるでしょう🌞", "ja"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     cols = ["id_a", "id_b", "jaccard"]
@@ -102,11 +112,15 @@ def test_jaccard_gather_nul_and_short_texts(spark):
         lambda: _rows(minhash_lsh_pairs(df, threshold=0.3, verify="exact"), cols),
     )
     assert gather == attach
+    assert {(a, b) for a, b, _ in gather} >= {
+        ("d1", "d2"), ("e1", "e2"), ("f1", "f2"), ("g1", "g2")
+    }
 
 
 def test_embedding_bucket_kernel_matches_join_reference(spark):
     """The per-bucket pair kernel must reproduce the r8 join+attach+UDF
-    reference exactly (pairs and unrounded cosine doubles)."""
+    reference exactly (pairs and unrounded cosine doubles) — including on a
+    repeated id (no self-pair) and a null id (never paired)."""
     from geomesa_spark.operators.dedup import _attach, _bucket_guard
     from geomesa_spark.operators.similarity import (
         cosine_pairs_udf,
@@ -115,7 +129,13 @@ def test_embedding_bucket_kernel_matches_join_reference(spark):
         synth_embeddings,
     )
 
-    emb = synth_embeddings(spark, 1500, partitions=8).localCheckpoint()
+    emb = synth_embeddings(spark, 1500, partitions=8)
+    twin = emb.orderBy("vec_id").first()
+    emb = emb.union(
+        spark.createDataFrame(
+            [(twin.vec_id, twin.embedding), (None, twin.embedding)], emb.schema
+        )
+    ).localCheckpoint()
     new = _rows(
         embedding_cosine_pairs(emb, threshold=0.30, lsh_bits=4, tables=4),
         ["id_a", "id_b", "cosine"],
@@ -139,10 +159,11 @@ def test_embedding_bucket_kernel_matches_join_reference(spark):
     cand = _attach(cand, vecs, "vec_id", "id_a")
     cand = _attach(cand, vecs, "vec_id", "id_b")
     cos = cosine_pairs_udf()(F.col("embedding_id_a"), F.col("embedding_id_b"))
+    # distinct: the repeated id attaches its (identical) vector twice
     ref = _rows(
-        cand.select("id_a", "id_b", cos.alias("cosine")).filter(
-            F.col("cosine") >= 0.30
-        ),
+        cand.select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= 0.30)
+        .distinct(),
         ["id_a", "id_b", "cosine"],
     )
     assert new and new == ref

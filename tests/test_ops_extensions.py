@@ -93,7 +93,9 @@ def test_simhash_pigeonhole_full_recall(spark, documents):
     """The multi-block construction must return EXACTLY the brute-force
     Hamming <= h pair set (pigeonhole guarantees no false negatives; the
     exact verify removes false positives)."""
-    from geomesa_spark.operators.dedup import simhash_col, simhash_pairs
+    from dedup_mirrors import simhash_col
+
+    from geomesa_spark.operators.dedup import simhash_pairs
 
     h = 6
     sigs = {

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geomesa_spark.plans.partitioning import (
+    _ensure_parallel,
     earth_partitioning,
     equal_partitioning,
     partition_bounds,
@@ -46,3 +47,38 @@ def test_partition_bounds_cover_data(spark, docs):
     for r in out.select("spart", "x", "y").sample(0.1, seed=42).collect():
         b = pb[r.spart]
         assert b.minx <= r.x <= b.maxx and b.miny <= r.y <= b.maxy
+
+
+@pytest.fixture()
+def one_file_scan(spark, tmp_path):
+    path = str(tmp_path / "one.parquet")
+    df = spark.range(1000).withColumn("Repartition_x", F.col("id") * 2)
+    df.coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 1 and df.rdd.getNumPartitions() == 1
+    return df
+
+
+def test_ensure_parallel_spreads_few_file_scan(spark, one_file_scan):
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+    # a column NAMED like the repartition operator is not a repartition,
+    # and a coalesce narrows the scan further instead of spreading it
+    for df in (
+        one_file_scan,
+        one_file_scan.select("id", "Repartition_x"),
+        one_file_scan.coalesce(1),
+        one_file_scan.repartition(3).coalesce(1),
+    ):
+        out = _ensure_parallel(df)
+        assert out.rdd.getNumPartitions() == par
+        assert sorted(r.id for r in out.collect()) == list(range(1000))
+
+
+def test_ensure_parallel_keeps_upstream_repartition(spark, one_file_scan):
+    for df in (
+        one_file_scan.repartition(3),
+        one_file_scan.repartition(3).select("id"),
+        one_file_scan.repartition("id"),
+    ):
+        assert _ensure_parallel(df) is df

@@ -35,10 +35,6 @@ from ..geom.wkt import from_wkt, to_wkt
 from ..index.geohash import geohash_decode_bbox, geohash_decode_point, geohash_encode
 
 
-def _dec(b):
-    return None if b is None else from_wkb(bytes(b))
-
-
 def _enc(g):
     return None if g is None else to_wkb(g)
 

@@ -16,14 +16,6 @@ from .core import POINT, Geometry
 from .wkb import from_wkb, points_from_wkb
 
 
-def decode_many(wkbs) -> list:
-    """Decode a sequence of WKB buffers to Geometry objects (None for null)."""
-    out = []
-    for b in wkbs:
-        out.append(None if b is None else from_wkb(b))
-    return out
-
-
 def bounds_many(wkbs) -> np.ndarray:
     """(n,4) minx,miny,maxx,maxy; NaN rows for nulls. Fast path for points."""
     n = len(wkbs)
@@ -959,32 +951,6 @@ def multipoint_predicate_batch(
     if predicate in ("within", "overlaps"):
         return np.zeros(n, dtype=bool)
     raise ValueError(f"multipoint_predicate_batch: unsupported {predicate}")
-
-
-def predicate_many(wkbs_a, wkbs_b, pred_name: str) -> np.ndarray:
-    """Row-wise DE-9IM predicate over two WKB sequences; object array with
-    None for null inputs (reference nullableUDF semantics)."""
-    fn = getattr(alg, pred_name)
-    n = len(wkbs_a)
-    out = np.empty(n, dtype=object)
-    # fast path: both sides points + predicate is intersects/equals/disjoint
-    cache: dict[bytes, Geometry] = {}
-
-    def geo(b):
-        g = cache.get(b)
-        if g is None:
-            g = from_wkb(b)
-            if len(cache) < 4096:
-                cache[b] = g
-        return g
-
-    for i in range(n):
-        a, b = wkbs_a[i], wkbs_b[i]
-        if a is None or b is None:
-            out[i] = None
-        else:
-            out[i] = bool(fn(geo(bytes(a)), geo(bytes(b))))
-    return out
 
 
 def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:

@@ -139,11 +139,6 @@ def time_to_bin_offset(epoch_seconds, interval: str = DEFAULT_INTERVAL):
     return bins.astype(np.int64), offs.astype(np.int64)
 
 
-def bin_bounds_seconds(b: int, interval: str = DEFAULT_INTERVAL) -> tuple[int, int]:
-    per = SECONDS_PER[interval]
-    return b * per, (b + 1) * per - 1
-
-
 def z3_index(lons, lats, epoch_seconds, interval: str = DEFAULT_INTERVAL,
              bits: int = Z3_BITS) -> tuple[np.ndarray, np.ndarray]:
     """(time_bin, z3) pair — the analog of the reference's

@@ -9,12 +9,17 @@ or a per-bucket kernel — never a cross join — so the plan scales with
 duplicate density, not n^2.
 
 Scale notes:
-- candidate pairs carry IDS ONLY through the bucket shuffle. The per-doc
-  payloads they are verified against (minhash sig blobs, texts) are
-  gathered to the driver ONCE and broadcast when the table fits
-  spark.geomesa.dedup.gatherMaxBytes (_gather); above that cap they are
-  re-attached to the pairs with plain id joins (_attach). Embedding pairs
-  are scored inside each LSH bucket, so vectors never ride a pair.
+- candidate pairs carry IDS ONLY through the bucket shuffle. The MinHash
+  pipeline decides gather-vs-attach ONCE per call, from one size aggregate
+  over the signature table: when the per-doc payloads the pairs are
+  verified against (sig blobs, plus texts for exact verify) fit
+  spark.geomesa.dedup.gatherMaxBytes, ONE driver gather (_gather) feeds
+  both broadcasts; above that cap both stages re-attach the payloads with
+  plain id joins (_attach). Each score (estimate, exact Jaccard) has ONE
+  kernel, fed by either payload source. Embedding pairs are scored inside
+  each LSH bucket, so vectors never ride a pair.
+- MinHash bands and SimHash blocks share one bucket self-join
+  (_bucket_self_join), its explode built as one SQL expression.
 - n-gram Jaccard generates candidates with MinHash banding (miss probability
   (1-t^r)^b) and runs the exact Jaccard only on candidates. Default (r=8,
   b=16): selective enough that a self-similar corpus (mass of pairs at
@@ -124,43 +129,9 @@ def _minhash_text_udf(num_hashes: int, k: int = 3, seed: int = 42):
         flush()
         return pd.Series(out, dtype=object)
 
-    return F.pandas_udf(mh, ArrayType(LongType()))
-
-
-def _exact_jaccard_udf(k: int = 3):
-    """(text_a, text_b) -> EXACT distinct-k-shingle Jaccard, one batch pass.
-    Identical math to size(array_intersect)/size(array_union) over
-    tests/dedup_mirrors.shingles_col arrays, but pairs carry ~300-byte
-    strings through the attach joins instead of ~300-element string arrays,
-    and the set ops run in Python per batch instead of interpreted per
-    element."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        # candidate pairs share documents (one doc pairs with many), so
-        # memoize the shingle set per distinct text within the batch
-        cache: dict = {}
-
-        def sh(t):
-            s = cache.get(t)
-            if s is None:
-                s = _shingle_set(t, k)
-                if len(cache) < 65536:
-                    cache[t] = s
-            return s
-
-        out = np.full(len(a), np.nan)
-        av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-        for i in range(len(av)):
-            ta, tb = av[i], bv[i]
-            if ta is None or tb is None:
-                continue
-            sa, sb = sh(ta), sh(tb)
-            out[i] = len(sa & sb) / len(sa | sb)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
+    # asNondeterministic: the null-signature filter would otherwise be
+    # pushed below the projection and run the kernel twice per row
+    return F.pandas_udf(mh, ArrayType(LongType())).asNondeterministic()
 
 
 def _pack_sig_udf():
@@ -182,34 +153,6 @@ def _pack_sig_udf():
         )
 
     return F.pandas_udf(f, BinaryType())
-
-
-def _sig_match_frac_bin_udf(num_hashes: int):
-    """(sigb_a, sigb_b) packed-sig blobs -> matching-position fraction (the
-    minhash Jaccard estimator). One zero-copy frombuffer over the whole
-    batch instead of 2 x batch-size np.asarray(list) conversions."""
-    from pyspark.sql.types import DoubleType
-
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = a.to_numpy(dtype=object)
-        bv = b.to_numpy(dtype=object)
-        ok = np.array(
-            [x is not None and y is not None for x, y in zip(av, bv)],
-            dtype=bool,
-        )
-        out = np.full(len(av), np.nan)
-        if ok.any():
-            A = np.frombuffer(b"".join(av[ok]), dtype="<i4").reshape(
-                -1, num_hashes
-            )
-            Bm = np.frombuffer(b"".join(bv[ok]), dtype="<i4").reshape(
-                -1, num_hashes
-            )
-            out[ok] = (A == Bm).mean(axis=1)
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -552,6 +495,32 @@ def _bucket_guard(keyed: DataFrame, key_cols: list[str], max_bucket: int | None)
 # ------------------------------------------------------------------ MinHash
 
 
+def _bucket_self_join(
+    df: DataFrame,
+    id_col: str,
+    kv_sql: list[str],
+    key: list[str],
+    carry: tuple[str, ...] = (),
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Rows of `df` that share a bucket, as a self-join with sides aliased
+    `a` and `b` and a.id < b.id: each row explodes into one struct per
+    kv_sql entry (SQL struct expressions whose fields complete `key`),
+    _bucket_guard drops oversized buckets, and the two sides join on `key`.
+    `carry` columns ride along to both sides. The explode is ONE SQL
+    string: built as Columns it costs a py4j round trip per struct field
+    (measured on 4 vCPU: a 16-band _lsh_candidates call took 0.33 s of
+    driver time with Column structs, 0.19 s with the string)."""
+    keep = [f"`{c}`" for c in (id_col, *carry)]
+    tbl = df.selectExpr(
+        *keep, f"explode(array({', '.join(kv_sql)})) AS _bb"
+    ).selectExpr(*keep, "_bb.*")
+    tbl = _bucket_guard(tbl, key, max_bucket)
+    a = tbl.alias("a")
+    b = tbl.alias("b")
+    return a.join(b, on=key).filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+
+
 def _lsh_candidates(
     sig: DataFrame,
     id_col: str,
@@ -574,35 +543,21 @@ def _lsh_candidates(
     Measured at sf0.1: 75% of the global candidate set was cross-lang and
     only died after the sig attach; blocking the bucket key removes that
     volume from every downstream stage (the r8 ngram-tail cut)."""
-    rows_per_band = num_hashes // bands
-    keep = [id_col] + ([block_col] if block_col else [])
-    bands_df = sig.select(
-        *keep,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            F.slice(F.col("_sig"), i * rows_per_band + 1, rows_per_band)
-                        ).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("_bb"),
-    ).select(*keep, "_bb.band", "_bb.bucket")
-    key = ([block_col] if block_col else []) + ["band", "bucket"]
-    bands_df = _bucket_guard(bands_df, key, max_bucket)
-    a = bands_df.alias("a")
-    b = bands_df.alias("b")
-    return (
-        a.join(b, on=key)
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+    r = num_hashes // bands
+    carry = (block_col,) if block_col else ()
+    pairs = _bucket_self_join(
+        sig,
+        id_col,
+        [
+            f"struct({i} AS band, xxhash64(slice(_sig, {i * r + 1}, {r})) AS bucket)"
+            for i in range(bands)
+        ],
+        [*carry, "band", "bucket"],
+        carry,
+        max_bucket,
+    )
+    return pairs.select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
 
 
@@ -636,11 +591,12 @@ _EST_MARGIN = 0.15
 # option: when the per-document side fits a size cap, collect it ONCE,
 # broadcast it, and let the verify UDFs gather payloads by id — candidate
 # pairs then carry IDS ONLY end to end, and all four attach exchanges
-# disappear. The math inside is bit-identical (same int32 equality mean,
-# same shingle-set Jaccard). Above the cap (the 100 TB case: the document
-# table itself is too big to hold per executor) the attach-join path is
-# unchanged — this is deliberate join-strategy selection (guide §3.1), not
-# a scale regression.
+# disappear. Each verify score has ONE kernel; only its payload source
+# differs (broadcast table by id, or the attached columns), so the math is
+# bit-identical on both paths. Above the cap (the 100 TB case: the document
+# table itself is too big to hold per executor) the attach joins run —
+# this is deliberate join-strategy selection (guide §3.1), not a scale
+# regression.
 _GATHER_MAX_BYTES = 256 << 20
 
 
@@ -680,35 +636,61 @@ def _gather_ix(ids: pd.Index, s: pd.Series) -> np.ndarray:
     return ix
 
 
-def _est_match_frac_gather_udf(bc, num_hashes: int):
-    """(id_a, id_b) -> minhash matching-position fraction, gathering rows of
-    the broadcast sig matrix — VALUE-IDENTICAL to _sig_match_frac_bin_udf on
-    attached blobs (same int32 values, same equality mean)."""
+def _est_udf(num_hashes: int, bc=None):
+    """(a, b) -> minhash matching-position fraction (the Jaccard estimator)
+    over int32 signature rows. With `bc` (a broadcast (ids, sig matrix)) a
+    and b are ids whose rows are gathered from the matrix; without it they
+    are the attached packed-sig blobs, read with one zero-copy frombuffer
+    per batch. asNondeterministic pins the estimate where it stands: it is
+    neither evaluated twice per row nor re-ordered around a dedupe."""
     from pyspark.sql.types import DoubleType
 
-    def f(a: pd.Series, b: pd.Series) -> pd.Series:
+    def rows(s: pd.Series) -> np.ndarray:
+        if bc is None:
+            return np.frombuffer(b"".join(s), dtype="<i4").reshape(-1, num_hashes)
         ids, M = bc.value
-        return pd.Series((M[_gather_ix(ids, a)] == M[_gather_ix(ids, b)]).mean(axis=1))
-
-    return F.pandas_udf(f, DoubleType())
-
-
-def _exact_jaccard_gather_udf(bc, k: int):
-    """(id_a, id_b) -> EXACT distinct-k-shingle Jaccard, texts gathered from
-    the broadcast table. Each text's distinct-gram set is materialized ONCE
-    per worker as a SORTED array of integer gram ids from a per-worker vocab
-    dict (exact string->id bijection, so intersection/union COUNTS are
-    identical to _exact_jaccard_udf's Python set math and the quotient is
-    bit-identical; ~1 KB per text vs ~18 KB for string sets). Pairs
-    intersect by searchsorted over the sorted id arrays — measured 2.5x
-    faster per pair than np.intersect1d and ~7x than fresh set building."""
-    from pyspark.sql.types import DoubleType
-
-    vocab: dict = {}
-    cache: dict = {}
+        return M[_gather_ix(ids, s)]
 
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
-        ids, texts = bc.value
+        return pd.Series((rows(a) == rows(b)).mean(axis=1))
+
+    return F.pandas_udf(f, DoubleType()).asNondeterministic()
+
+
+def _exact_jaccard_udf(k: int, bc=None):
+    """(a, b) -> EXACT distinct-k-shingle Jaccard. With `bc` (a broadcast
+    (ids, texts)) a and b are ids into the broadcast texts; without it they
+    are the attached texts, coded per batch. Each distinct text's gram
+    set is materialized once as a SORTED array of integer gram ids from a
+    vocab dict (an exact string->id bijection, so the intersection and union
+    COUNTS are those of Python set math; ~1 KB per text vs ~18 KB for string
+    sets). Pairs intersect by searchsorted over the sorted id arrays —
+    measured 2.5x faster per pair than np.intersect1d and ~7x than fresh set
+    building. The vocab and cache live per worker on the broadcast source
+    (ids are global) and per Arrow batch on the attached one (bounded
+    memory above the gather cap). asNondeterministic: the filter on the
+    projected alias would otherwise be pushed below the projection and
+    evaluate the UDF twice per row (guide §4.4)."""
+    from pyspark.sql.types import DoubleType
+
+    worker_vocab: dict = {}
+    worker_cache: dict = {}
+
+    def f(a: pd.Series, b: pd.Series) -> pd.Series:
+        n = len(a)
+        if bc is None:
+            # a dict, not pd.factorize: pandas hashes strings as C strings,
+            # which would merge texts that differ only after a NUL
+            code: dict = {}
+            ia = np.fromiter((code.setdefault(t, len(code)) for t in a), np.int64, n)
+            ib = np.fromiter((code.setdefault(t, len(code)) for t in b), np.int64, n)
+            texts = list(code)
+            vocab: dict = {}
+            cache: dict = {}
+        else:
+            ids, texts = bc.value
+            ia, ib = _gather_ix(ids, a), _gather_ix(ids, b)
+            vocab, cache = worker_vocab, worker_cache
 
         def sh(ix: int):
             s = cache.get(ix)
@@ -723,15 +705,12 @@ def _exact_jaccard_gather_udf(bc, k: int):
                 cache[ix] = s
             return s
 
-        ia = _gather_ix(ids, a)
-        ib = _gather_ix(ids, b)
-        n = len(ia)
         out = np.empty(n, dtype=np.float64)
-        # batch-level grouping: pairs arrive clustered by id_b (the verify
-        # caller sorts within partitions), so consecutive rows share the
-        # partner array sb — concatenate the run's sa arrays and do ONE
-        # searchsorted + reduceat per run instead of one numpy call chain
-        # per pair (measured ~23us/pair ungrouped, numpy call overhead)
+        # batch-level grouping: pairs arrive clustered by id_b (the caller
+        # sorts within partitions), so consecutive rows share the partner
+        # array sb — concatenate the run's sa arrays and do ONE searchsorted
+        # + reduceat per run instead of one numpy call chain per pair
+        # (measured ~23us/pair ungrouped, numpy call overhead)
         i = 0
         while i < n:
             j = i + 1
@@ -757,102 +736,7 @@ def _exact_jaccard_gather_udf(bc, k: int):
             i = j
         return pd.Series(out)
 
-    return F.pandas_udf(f, DoubleType())
-
-
-def _exact_verify(
-    cand: DataFrame,
-    txt: DataFrame,
-    id_col: str,
-    k: int,
-    threshold: float,
-) -> DataFrame:
-    """Exact shingle-Jaccard verification of id-only candidate pairs ->
-    (id_a, id_b, jaccard >= threshold). Gather path when the text table fits
-    the cap (pairs never carry texts); attach-join path otherwise."""
-    slim = txt.select(id_col, "_txt")
-    stats = txt.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("_txt")).alias("b")
-    ).first()
-    table = _gather(slim, stats["n"] * 64 + (stats["b"] or 0), id_col)
-    if table is not None:
-        bc = txt.sparkSession.sparkContext.broadcast(
-            (pd.Index(table[id_col]), table["_txt"].to_numpy(dtype=object))
-        )
-        # local sort clusters each partition's pairs by partner id so the
-        # gather kernel's run-grouping amortizes (row order is not part of
-        # the result contract; the pair SET is unchanged)
-        cand = cand.sortWithinPartitions("id_b")
-        # asNondeterministic: the filter on the projected alias would
-        # otherwise be pushed below the projection and evaluate the UDF
-        # twice per row (guide §4.4)
-        jac = _exact_jaccard_gather_udf(bc, k).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-        return cand.select("id_a", "id_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
-    cand = _attach(cand, slim, id_col, "id_a")
-    cand = _attach(cand, slim, id_col, "id_b")
-    jac = _exact_jaccard_udf(k)(F.col("_txt_id_a"), F.col("_txt_id_b"))
-    return cand.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
-def _est_prefilter(
-    cand: DataFrame,
-    sig: DataFrame,
-    id_col: str,
-    min_est: float,
-    num_hashes: int,
-    keep_est: bool = False,
-) -> DataFrame:
-    """RAW multi-band candidate pairs (_lsh_candidates) -> distinct
-    (id_a, id_b) with the minhash estimate >= min_est, plus the estimate as
-    `est_jaccard` when keep_est. Sig-only, BEFORE any text movement: a fused
-    single attach (sig+txt per side) was measured 2.5x SLOWER on the
-    minhash gate (r7). When the per-doc sig table
-    fits the gather cap the estimate runs on ID-ONLY pairs against the
-    broadcast sig matrix (no attach joins at all — at sf1.0 the two sig
-    attaches alone shuffled ~72 M pairs x 1 KB), and the raw copies are
-    filtered FIRST: the estimate is per-pair deterministic, so filter-then-
-    dedupe is set-identical to dedupe-then-filter, and the dedupe exchange
-    moves from the full candidate volume (measured sf1.0 multiplicity only
-    1.08x: 78.0M raw vs 72.1M distinct) to the ~12M survivors. Above the cap
-    the pairs are deduplicated, then the sig blobs attached per side."""
-    sigs = sig.select(id_col, "_sigb")
-    table = _gather(sigs, 4 * num_hashes * sig.count(), id_col)
-    if table is None:
-        cand = cand.dropDuplicates(["id_a", "id_b"])
-        cand = _attach(cand, sigs, id_col, "id_a")
-        cand = _attach(cand, sigs, id_col, "id_b")
-        est = _sig_match_frac_bin_udf(num_hashes).asNondeterministic()(
-            F.col("_sigb_id_a"), F.col("_sigb_id_b")
-        )
-    else:
-        M = np.frombuffer(b"".join(map(bytes, table["_sigb"])), dtype="<i4")
-        bc = sig.sparkSession.sparkContext.broadcast(
-            (pd.Index(table[id_col]), M.reshape(len(table), num_hashes))
-        )
-        est = _est_match_frac_gather_udf(bc, num_hashes).asNondeterministic()(
-            F.col("id_a"), F.col("id_b")
-        )
-    # asNondeterministic pins the estimate where it stands: it is neither
-    # evaluated twice per row nor re-ordered around the dedupe
-    if keep_est:
-        out = cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
-            F.col("est_jaccard") >= min_est
-        )
-    else:
-        out = cand.filter(est >= min_est).select("id_a", "id_b")
-    if table is None:
-        return out
-    # partition the dedupe by id_b alone: a subset of the dedupe key still
-    # co-locates every copy of a pair (same exchange count), and it clusters
-    # each partition by PARTNER so the exact-verify kernel's run-grouping
-    # amortizes over ~hundreds of pairs
-    return out.repartition("id_b").dropDuplicates(["id_a", "id_b"])
+    return F.pandas_udf(f, DoubleType()).asNondeterministic()
 
 
 def _minhash_pairs(
@@ -870,7 +754,13 @@ def _minhash_pairs(
 ) -> DataFrame:
     """The MinHash-LSH pipeline behind minhash_lsh_pairs and
     ngram_jaccard_pairs: canonicalize -> signatures -> raw LSH candidates
-    -> estimate filter -> (verify='exact') exact shingle-Jaccard verify."""
+    -> estimate filter -> (verify='exact') exact shingle-Jaccard verify.
+
+    The gather-vs-attach fork is decided ONCE, from one size aggregate over
+    the signature table: when its payloads (sig blobs, plus texts for
+    verify='exact') fit the gather cap, one _gather feeds both broadcasts
+    and candidate pairs carry ids only; otherwise both stages attach the
+    payloads with id joins."""
     keep = [id_col] + ([block_col] if block_col else [])
     if canonicalize:
         df = canonicalize_exact(df, text_col, id_col, carry=tuple(keep[1:]))
@@ -879,13 +769,12 @@ def _minhash_pairs(
     # ~300-byte text (not a ~len(text)-element shingle array) is carried,
     # and no interpreted transform/substring lambdas run per row.
     # localCheckpoint cuts the lineage so the minhash work runs ONCE, not
-    # once per downstream branch (candidates + each attach side); the
-    # materialized blocks are GC-cleaned with the plan — no persist leak
-    txt = df.select(*keep, F.col(text_col).alias("_txt")).localCheckpoint(
-        eager=False
-    )
+    # once per downstream branch (size probe, candidates, gather or each
+    # attach side); the materialized blocks are GC-cleaned with the plan —
+    # no persist leak. Null and empty texts have no signature and drop here.
     sig = (
-        txt.withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
+        df.select(*keep, F.col(text_col).alias("_txt"))
+        .withColumn("_sig", _minhash_text_udf(num_hashes, k)(F.col("_txt")))
         .filter(F.col("_sig").isNotNull())
         .withColumn("_sigb", _pack_sig_udf()(F.col("_sig")))
         .localCheckpoint(eager=False)
@@ -897,12 +786,65 @@ def _minhash_pairs(
         sig.select(id_col, "_sig", *keep[1:]),
         id_col, num_hashes, bands, max_bucket, block_col=block_col,
     )
-    if verify != "exact":
-        return _est_prefilter(
-            cand, sig, id_col, threshold, num_hashes, keep_est=True
+    exact = verify == "exact"
+    size = sig.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.octet_length("_txt")).alias("b")
+    ).first()
+    nbytes = size["n"] * 4 * num_hashes
+    if exact:
+        nbytes += size["n"] * 64 + (size["b"] or 0)
+    table = _gather(
+        sig.select(id_col, "_sigb", *(["_txt"] if exact else [])), nbytes, id_col
+    )
+    # the estimate filter is sig-only and runs BEFORE any text movement (a
+    # fused sig+txt attach was measured 2.5x SLOWER, r7); above the cap the
+    # raw multi-band pairs are deduplicated before the sig attach
+    if table is None:
+        sigs = sig.select(id_col, "_sigb")
+        cand = cand.dropDuplicates(["id_a", "id_b"])
+        cand = _attach(cand, sigs, id_col, "id_a")
+        cand = _attach(cand, sigs, id_col, "id_b")
+        est = _est_udf(num_hashes)(F.col("_sigb_id_a"), F.col("_sigb_id_b"))
+    else:
+        ids = pd.Index(table[id_col])
+        M = np.frombuffer(b"".join(map(bytes, table["_sigb"])), dtype="<i4")
+        sc = sig.sparkSession.sparkContext
+        est = _est_udf(num_hashes, sc.broadcast((ids, M.reshape(len(ids), num_hashes))))(
+            F.col("id_a"), F.col("id_b")
         )
-    cand = _est_prefilter(cand, sig, id_col, threshold - _EST_MARGIN, num_hashes)
-    return _exact_verify(cand, txt, id_col, k, threshold)
+    if exact:
+        cand = cand.filter(est >= threshold - _EST_MARGIN).select("id_a", "id_b")
+    else:
+        cand = cand.select("id_a", "id_b", est.alias("est_jaccard")).filter(
+            F.col("est_jaccard") >= threshold
+        )
+    if table is not None:
+        # the estimate is per-pair deterministic, so filtering the raw
+        # copies FIRST is set-identical to dedupe-then-filter, and the dedupe
+        # exchange moves from the full candidate volume (sf1.0 multiplicity
+        # only 1.08x: 78.0M raw vs 72.1M distinct) to the ~12M survivors.
+        # Partitioning it by id_b alone still co-locates every copy of a
+        # pair, and clusters each partition by PARTNER so the exact kernel's
+        # run-grouping amortizes over ~hundreds of pairs
+        cand = cand.repartition("id_b").dropDuplicates(["id_a", "id_b"])
+    if not exact:
+        return cand
+    if table is None:
+        texts = sig.select(id_col, "_txt")
+        cand = _attach(cand, texts, id_col, "id_a")
+        cand = _attach(cand, texts, id_col, "id_b")
+        jac = _exact_jaccard_udf(k)(F.col("_txt_id_a"), F.col("_txt_id_b"))
+    else:
+        bc = sc.broadcast((ids, table["_txt"].to_numpy(dtype=object)))
+        jac = _exact_jaccard_udf(k, bc)(F.col("id_a"), F.col("id_b"))
+    # local sort clusters each partition's pairs by partner id so the
+    # kernel's run-grouping amortizes (row order is not part of the result
+    # contract; the pair SET is unchanged)
+    return (
+        cand.sortWithinPartitions("id_b")
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def minhash_lsh_pairs(
@@ -987,7 +929,8 @@ def _simhash_text_udf(bits: int = SIMHASH_BITS):
     int(hex[2:17], 16) is VALUE-IDENTICAL to conv(substring(md5(t), 3, 15),
     16, 10)::long (same digest, same hex window), Python str.lower()/
     split(' ') match lower()/split on the engine's corpora (ASCII; split
-    keeps empty tokens in both). Token hashes are memoized per worker
+    keeps empty tokens in both). A null text has no signature (null, as
+    in the DuckDB oracle). Token hashes are memoized per worker
     (natural-language tokens repeat)."""
     import hashlib
 
@@ -998,12 +941,11 @@ def _simhash_text_udf(bits: int = SIMHASH_BITS):
 
     def f(texts):  # no hints (local-import annotations trap)
         out = np.zeros(len(texts), dtype=np.int64)
+        null = texts.isna().to_numpy()
         for i, t in enumerate(texts):
-            if t is None:
+            if null[i]:
                 continue
             toks = t.lower().split(" ")
-            if not toks:
-                continue
             hv = np.empty(len(toks), dtype=np.int64)
             for j, tok in enumerate(toks):
                 h = cache.get(tok)
@@ -1015,9 +957,10 @@ def _simhash_text_udf(bits: int = SIMHASH_BITS):
             bitm = (hv[:, None] >> shifts) & 1  # (tokens, bits)
             contrib = bitm.sum(axis=0) * 2 - len(hv)  # sum of +-1 per bit
             out[i] = int(((contrib > 0).astype(np.int64) << shifts).sum())
-        return pd.Series(out)
+        return pd.Series(pd.arrays.IntegerArray(out, null))
 
-    return F.pandas_udf(f, LongType())
+    # asNondeterministic: see _minhash_text_udf
+    return F.pandas_udf(f, LongType()).asNondeterministic()
 
 
 def _simhash_blocks(max_hamming: int, bits: int = SIMHASH_BITS):
@@ -1050,30 +993,20 @@ def simhash_pairs(
     minhash_lsh_pairs."""
     if canonicalize:
         df = canonicalize_exact(df, text_col, id_col)
-    sh = _ensure_parallel(df).select(
-        F.col(id_col), _simhash_text_udf()(F.col(text_col)).alias("_sig")
-    ).localCheckpoint(eager=False)  # signatures computed once, both join sides
-    blocks = _simhash_blocks(max_hamming)
-    block_structs = [
-        F.struct(
-            F.lit(i).alias("block"),
-            F.shiftrightunsigned(F.col("_sig"), off)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("bval"),
-        )
-        for i, (off, width) in enumerate(blocks)
+    sh = (
+        _ensure_parallel(df)
+        .select(F.col(id_col), _simhash_text_udf()(F.col(text_col)).alias("_sig"))
+        .filter(F.col("_sig").isNotNull())
+        .localCheckpoint(eager=False)  # signatures computed once, both join sides
+    )
+    kv = [
+        f"struct({i} AS block, shiftrightunsigned(_sig, {off}) & {(1 << width) - 1} AS bval)"
+        for i, (off, width) in enumerate(_simhash_blocks(max_hamming))
     ]
-    tbl = sh.select(
-        id_col, "_sig", F.explode(F.array(*block_structs)).alias("_b")
-    ).select(id_col, "_sig", "_b.block", "_b.bval")
-    tbl = _bucket_guard(tbl, ["block", "bval"], max_bucket)
-    a = tbl.alias("a")
-    b = tbl.alias("b")
+    pairs = _bucket_self_join(sh, id_col, kv, ["block", "bval"], ("_sig",), max_bucket)
     ham = F.bit_count(F.col("a._sig").bitwiseXOR(F.col("b._sig")))
     return (
-        a.join(b, on=["block", "bval"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
+        pairs.select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             ham.alias("hamming"),

@@ -319,4 +319,10 @@ def knn(
         radius = min(radius * 4, max_radius_m) if radius < max_radius_m else max_radius_m
         if pending and results is not None:
             results = results.localCheckpoint(eager=False)  # bound lineage growth
-    return results if results is not None else docs.limit(0)
+    if results is None:  # no queries: empty, with the result schema
+        results = docs.limit(0).select(
+            "*",
+            F.lit(None).cast("string").alias("query_id"),
+            F.lit(None).cast("double").alias("dist_m"),
+        )
+    return results

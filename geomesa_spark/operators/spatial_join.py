@@ -25,8 +25,6 @@ should be broadcast (`broadcast=True`) to skip the shuffle entirely.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -51,6 +49,9 @@ from ..geom import core as gcore
 from ..index.zorder import WORLD, normalize
 
 DEFAULT_JOIN_BITS = 6  # 64x64 world grid (~5.6 deg cells); override per join
+# automatic broadcast: the exploded right side is broadcast when the raw right
+# input has at most this many rows
+_BROADCAST_MAX_ROWS = 200_000
 
 
 def _grid_scale(bits: int) -> tuple[float, float]:
@@ -1232,11 +1233,11 @@ def spatial_join(
         # the exploded right side when it is small enough to ship to every
         # executor; otherwise let Spark pick hash/sort-merge on the cell key.
         try:
-            thresh = int(os.environ.get("GEOMESA_SPARK_BROADCAST_ROWS", "200000"))
             # probe the RAW right input (1:1 with R): limit+count early-stops
             # and never executes the envelope UDF, so the probe job is a
             # cheap scan rather than a full second execution of R's lineage
-            broadcast = right.limit(thresh + 1).count() <= thresh
+            n = right.limit(_BROADCAST_MAX_ROWS + 1).count()
+            broadcast = n <= _BROADCAST_MAX_ROWS
         except Exception:
             broadcast = False
     right_side = F.broadcast(R3) if broadcast else R3

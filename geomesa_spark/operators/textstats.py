@@ -97,12 +97,3 @@ def fingerprint_udf():
         return pd.Series(out)
 
     return F.pandas_udf(fp, LongType())
-
-
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Full text-analysis projection: tokens, quality, language guess,
-    fingerprint."""
-    out = quality_cols(df, text_col)
-    return out.withColumn("token_count_bpe", token_count_col(F.col(text_col))).withColumn(
-        "lang_guess", lang_id_col(F.col(text_col))
-    ).withColumn("fingerprint", fingerprint_udf()(F.col(text_col)))

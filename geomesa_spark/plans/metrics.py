@@ -128,21 +128,3 @@ class StageRunner:
             }
             for r in self.results.values()
         ]
-
-
-class QueryMetricsListener:
-    """Collects (name, duration, rows-read) per query via QueryExecutionListener
-    — the analog of the reference's geomesa.query.planning/execution timers."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.records: list[dict] = []
-
-    def time(self, name: str, df: DataFrame) -> DataFrame:
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        self.records.append({"query": name, "seconds": round(time.time() - t0, 3)})
-        return df
-
-    def table(self) -> DataFrame:
-        return self.spark.createDataFrame(self.records)

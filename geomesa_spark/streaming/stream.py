@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.density import grid_i, tile_x, tile_y
-from ..sources.docs import PARTITION_CELL_BITS, index_points_df
 
 
 KAFKA_POINT_VALUE_SCHEMA = "doc_id string, ts timestamp, x double, y double"
@@ -49,12 +48,6 @@ def kafka_point_stream(
         .load()
     )
     return parse_kafka_points(raw)
-
-
-def index_stream(stream: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
-    """Add the engine's derived point columns to a stream (pure Columns —
-    streaming-safe, no stateful ops)."""
-    return index_points_df(stream, lon_col, lat_col, with_wkb=False)
 
 
 def windowed_tile_counts(

@@ -88,5 +88,8 @@ def simhash_from_hashes(hash_arr, bits: int = SIMHASH_BITS):
 
 
 def simhash_col(text_col, bits: int = SIMHASH_BITS):
-    """text -> simhash in one Column; mirrors dedup._simhash_text_udf."""
-    return simhash_from_hashes(token_hashes_col(text_col), bits)
+    """text -> simhash in one Column (null for a null text); mirrors
+    dedup._simhash_text_udf."""
+    return F.when(
+        text_col.isNotNull(), simhash_from_hashes(token_hashes_col(text_col), bits)
+    )

@@ -60,7 +60,8 @@ def test_knn_join_ten_thousand_queries(spark, docs):
 
 def test_knn_join_matches_process_knn(spark, docs):
     """Same fixtures through both formulations -> identical (query, doc)
-    row sets, including a pole-adjacent and an antimeridian query."""
+    row sets, including a pole-adjacent and an antimeridian query; an empty
+    query list gives no rows under the same result schema."""
     qs = [
         ("qa", 10.0, 5.0),
         ("qb", -179.9, 0.0),
@@ -69,12 +70,10 @@ def test_knn_join_matches_process_knn(spark, docs):
     ]
     # max radius 2e7 m so the antimeridian query reaches the doc region
     # (docs live in lon [-60, 60]; qb's window must wrap +-180)
-    proc = {
-        (r.query_id, r.doc_id)
-        for r in knn(
-            docs, qs, k=4, start_radius_m=100_000.0, max_radius_m=2.0e7
-        ).select("query_id", "doc_id").collect()
-    }
+    out = knn(docs, qs, k=4, start_radius_m=100_000.0, max_radius_m=2.0e7)
+    proc = {(r.query_id, r.doc_id) for r in out.select("query_id", "doc_id").collect()}
+    empty = knn(docs, [], k=4)
+    assert empty.dtypes == out.dtypes and empty.count() == 0
     qdf = spark.createDataFrame(qs, "query_id string, q_lon double, q_lat double")
     join = {
         (r.query_id, r.doc_id)

@@ -82,7 +82,12 @@ def test_exact_dedup(spark, documents):
 def test_simhash_finds_near_dups(spark, documents):
     from geomesa_spark.operators.dedup import simhash_pairs
 
-    got = {(r.id_a, r.id_b) for r in simhash_pairs(documents, max_hamming=8).collect()}
+    # two null-text rows: no signature, so they never pair (with each
+    # other or anything else)
+    nulls = spark.createDataFrame([(-1, None), (-2, None)], "doc_id long, text string")
+    docs = documents.select("doc_id", "text").unionByName(nulls)
+    got = {(r.id_a, r.id_b) for r in simhash_pairs(docs, max_hamming=8).collect()}
+    assert not any(a < 0 or b < 0 for a, b in got)
     want = exact_jaccard_pairs(documents, 0.95)
     # shingle-Jaccard >= 0.95 pairs are near-identical texts; their token
     # multisets agree, so their simhash Hamming distance must be small

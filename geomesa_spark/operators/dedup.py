@@ -928,7 +928,7 @@ def _simhash_text_udf(bits: int = SIMHASH_BITS):
     TOKEN (~40 tokens/doc). hashlib.md5 over the UTF-8 token bytes with
     int(hex[2:17], 16) is VALUE-IDENTICAL to conv(substring(md5(t), 3, 15),
     16, 10)::long (same digest, same hex window), Python str.lower()/
-    split(' ') match lower()/split on the engine's corpora (ASCII; split
+    split(' ') match lower()/split, non-ASCII case mappings included (split
     keeps empty tokens in both). A null text has no signature (null, as
     in the DuckDB oracle). Token hashes are memoized per worker
     (natural-language tokens repeat)."""

@@ -12,18 +12,23 @@ Spark-first plan: query points are broadcast (they are few); each round
   3. computes geodesic distance as a pure Column expression (haversine via
      built-in trig -> whole-stage codegen, no Python),
   4. row_number() over (partition by query order by distance) keeps k,
-  5. queries whose k-th best distance is already within the current radius
-     are DONE (their top-k cannot change); the rest double the radius.
-The loop runs on the driver; each round is one Spark job over the pruned
-partitions only — the DataFrame analog of the reference's expanding window.
+  5. ONE collect brings those rows to the driver: queries with k rows
+     (all within the round radius, so no farther point can displace them)
+     are DONE and their rows kept; the rest quadruple the radius.
+The result is built from the kept rows — one collect per round, no
+checkpoint and no union lineage.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..geom.algorithms import EARTH_MEAN_RADIUS_M
@@ -221,15 +226,12 @@ def knn_join(
             .drop("w_minx", "w_miny", "w_maxx", "w_maxy", "q_lon", "q_lat", "qcell")
             .localCheckpoint(eager=False)
         )
+        # done with k rows (all within the round radius, so no farther doc
+        # can displace them) or once the search space is exhausted
         if radius >= max_radius_m:
             done_q = pending.select("query_id")
         else:
-            done_q = (
-                topk.groupBy("query_id")
-                .agg(F.count("*").alias("cnt"), F.max("dist_m").alias("kth"))
-                .filter((F.col("cnt") >= k) & (F.col("kth") <= F.lit(radius)))
-                .select("query_id")
-            )
+            done_q = topk.filter(F.col("_rn") == k).select("query_id")
         done_rows = topk.join(done_q, "query_id", "left_semi").drop("_rn")
         results = done_rows if results is None else results.unionByName(done_rows)
         if radius >= max_radius_m:
@@ -251,78 +253,56 @@ def knn(
     start_radius_m: float = 1_000.0,
     max_radius_m: float = 1_000_000.0,
 ) -> DataFrame:
-    """queries: [(query_id, lon, lat), ...]. Returns docs columns +
-    query_id + dist_m, k rows per query (fewer if max radius exhausts).
+    """queries: [(query_id, lon, lat), ...] with distinct ids. Returns docs
+    columns + query_id + dist_m, k rows per query (fewer if max radius
+    exhausts). One collect per round; result built from the kept rows.
 
-    QUERY-COUNT ENVELOPE: the query list, per-round stats, and the broadcast
-    window table are O(len(queries)) DRIVER state — correct for the
-    reference's process semantics (hundreds to a few thousand points,
-    KNearestNeighborSearchProcess.scala:39-260). For query TABLES beyond
-    ~10^4 points use knn_join above: same expanding-radius semantics, all
-    state in DataFrames."""
+    QUERY-COUNT ENVELOPE: the query list, the broadcast window table and the
+    kept rows (<= k per query) are O(len(queries)) DRIVER state — correct
+    for the reference's process semantics (hundreds to a few thousand
+    points). For query TABLES beyond ~10^4 points use knn_join above: same
+    expanding-radius semantics, all state in DataFrames."""
+    pending = [(str(q), float(lon), float(lat)) for q, lon, lat in queries]
+    if len({q for q, _, _ in pending}) != len(pending):
+        raise ValueError("knn: query ids must be distinct")
     spark: SparkSession = docs.sparkSession
-    qdf_all = spark.createDataFrame(
-        [(str(q), float(lon), float(lat)) for q, lon, lat in queries],
-        "query_id string, q_lon double, q_lat double",
-    )
-
-    pending = list(queries)
-    results = None
+    schema = StructType([*docs.schema, StructField("query_id", StringType()), StructField("dist_m", DoubleType())])
+    arrow_schema = to_arrow_schema(schema)
+    kept = [arrow_schema.empty_table()]
     radius = start_radius_m
     while pending:
+        point = {q: (lon, lat) for q, lon, lat in pending}
         windows = _query_windows(pending, radius)
         cells = _cover_cells([w for _, w in windows], PARTITION_CELL_BITS)
         wdf = spark.createDataFrame(
-            [(str(q), *w) for q, w in windows],
-            "query_id string, w_minx double, w_miny double, w_maxx double, w_maxy double",
-        ).join(qdf_all, "query_id")
+            [(q, *point[q], *w) for q, w in windows],
+            "query_id string, q_lon double, q_lat double,"
+            " w_minx double, w_miny double, w_maxx double, w_maxy double",
+        )
         # MULTI_CELL (-1) rows (multi-cell extents / null geom) are never
         # pruned; their x/y centroid still passes the window+distance check
         cand = docs.filter(F.col("cell").isin([*cells, MULTI_CELL])).join(
-            F.broadcast(wdf),
-            (F.col("x") >= F.col("w_minx"))
-            & (F.col("x") <= F.col("w_maxx"))
-            & (F.col("y") >= F.col("w_miny"))
-            & (F.col("y") <= F.col("w_maxy")),
+            F.broadcast(wdf), F.expr("x BETWEEN w_minx AND w_maxx AND y BETWEEN w_miny AND w_maxy")
         )
         cand = cand.withColumn(
             "dist_m", haversine_col(F.col("x"), F.col("y"), F.col("q_lon"), F.col("q_lat"))
         ).filter(F.col("dist_m") <= F.lit(min(radius, max_radius_m)))
         w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("doc_id").asc())
-        topk = (
+        top = (
             cand.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
-            .drop("w_minx", "w_miny", "w_maxx", "w_maxy", "q_lon", "q_lat")
-            # the stats collect below is an ACTION on this round's top-k and
-            # the final result is another — checkpoint so the scan + join +
-            # window run once per round, not twice
-            .localCheckpoint(eager=False)
+            .select(*schema.names)
+            .toArrow()
+            .cast(arrow_schema)
         )
-        stats = {
-            r["query_id"]: (r["cnt"], r["kth"])
-            for r in topk.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("dist_m").alias("kth"))
-            .collect()
-        }
-        done_ids = set()
-        for q, lon, lat in pending:
-            cnt, kth = stats.get(str(q), (0, None))
-            # done when k found within the CURRENT radius (no farther point can
-            # displace them) or the search space is exhausted
-            if (cnt >= k and kth is not None and kth <= radius) or radius >= max_radius_m:
-                done_ids.add(str(q))
-        done_df = topk.filter(F.col("query_id").isin(sorted(done_ids))).drop("_rn")
-        results = done_df if results is None else results.unionByName(done_df)
-        pending = [q for q in pending if str(q[0]) not in done_ids]
+        # done: k rows found (none farther can displace them) or space exhausted
+        ids = top.column("query_id").to_pylist()
+        found = Counter(ids)
+        done = {q for q in point if found[q] >= k or radius >= max_radius_m}
+        kept.append(top.filter(pa.array([q in done for q in ids], pa.bool_())))
+        pending = [p for p in pending if p[0] not in done]
         # x4 expansion: each extra round quadruples the window area, so even a
         # badly-underestimated start radius converges in a few Spark jobs
-        radius = min(radius * 4, max_radius_m) if radius < max_radius_m else max_radius_m
-        if pending and results is not None:
-            results = results.localCheckpoint(eager=False)  # bound lineage growth
-    if results is None:  # no queries: empty, with the result schema
-        results = docs.limit(0).select(
-            "*",
-            F.lit(None).cast("string").alias("query_id"),
-            F.lit(None).cast("double").alias("dist_m"),
-        )
-    return results
+        radius = min(radius * 4, max_radius_m)
+    # one chunk: Spark stops reading an Arrow stream at its first empty batch
+    return spark.createDataFrame(pa.concat_tables(kept).combine_chunks(), schema)

@@ -1164,7 +1164,21 @@ def spatial_join(
     L3 = _with_join_cells(L2, "l_", bits)
     R3 = _with_join_cells(R2, "r_", bits)
 
-    if salt:
+    if broadcast is None:
+        # automatic broadcast-vs-sort-merge selection (north rule): broadcast
+        # the exploded right side when it is small enough to ship to every
+        # executor; otherwise let Spark pick hash/sort-merge on the cell key.
+        try:
+            # probe the RAW right input (1:1 with R): limit+count early-stops
+            # and never executes the envelope UDF, so the probe job is a
+            # cheap scan rather than a full second execution of R's lineage
+            n = right.limit(_BROADCAST_MAX_ROWS + 1).count()
+            broadcast = n <= _BROADCAST_MAX_ROWS
+        except Exception:
+            broadcast = False
+    join_keys = ["join_cell"]
+    # a broadcast hash join has no shuffle skew to split: it never salts
+    if salt and not broadcast:
         # ADAPTIVE salting: a single hot cell is one join KEY, which AQE skew
         # handling cannot split — so find cells holding more rows than an
         # average shuffle partition and subdivide only those `salt` ways
@@ -1222,24 +1236,7 @@ def spatial_join(
                 ),
             )
             join_keys = ["join_cell", "_salt"]
-        else:
-            salt = None
-            join_keys = ["join_cell"]
-    else:
-        join_keys = ["join_cell"]
 
-    if broadcast is None:
-        # automatic broadcast-vs-sort-merge selection (north rule): broadcast
-        # the exploded right side when it is small enough to ship to every
-        # executor; otherwise let Spark pick hash/sort-merge on the cell key.
-        try:
-            # probe the RAW right input (1:1 with R): limit+count early-stops
-            # and never executes the envelope UDF, so the probe job is a
-            # cheap scan rather than a full second execution of R's lineage
-            n = right.limit(_BROADCAST_MAX_ROWS + 1).count()
-            broadcast = n <= _BROADCAST_MAX_ROWS
-        except Exception:
-            broadcast = False
     right_side = F.broadcast(R3) if broadcast else R3
 
     bbox_overlap = (
@@ -1257,10 +1254,8 @@ def spatial_join(
     rgeom = right_geom if right_geom not in overlap else f"{right_geom}_r"
     exact = joined.filter(pred_udf(F.col(left_geom), F.col(rgeom)))
 
-    drop = ["join_cell", "l_minx", "l_miny", "l_maxx", "l_maxy", "r_minx", "r_miny", "r_maxx", "r_maxy"]
-    if salt:
-        drop.append("_salt")
-    result = exact.drop(*drop)
+    drop = ["l_minx", "l_miny", "l_maxx", "l_maxy", "r_minx", "r_miny", "r_maxx", "r_maxy"]
+    result = exact.drop(*drop, *join_keys)
 
     if how == "inner":
         return result

@@ -78,10 +78,15 @@ def test_candidate_pairs_o_of_cluster_post_canonicalization(spark, planted):
 
 
 def test_minhash_text_kernel_matches_column_mirror(spark):
-    """The Arrow text kernel (shingling inside the batch) emits exactly the
-    signatures of the Column mirror (shingles_col + per-doc minhash), on
-    ASCII and on 2-, 3- and 4-byte utf-8 text alike."""
-    from geomesa_spark.operators.dedup import _minhash_text_udf
+    """The Arrow text kernels (shingling / tokenizing inside the batch) emit
+    exactly the signatures of their Column mirrors — MinHash (shingles_col +
+    per-doc minhash) and SimHash (simhash_col) — on ASCII and on 2-, 3- and
+    4-byte utf-8 text alike, including case mappings that change length or
+    differ by position (İ, final Σ, ß/ẞ, ligatures, titlecase ǅ), tabs and
+    a null text."""
+    from dedup_mirrors import simhash_col
+
+    from geomesa_spark.operators.dedup import _minhash_text_udf, _simhash_text_udf
 
     texts = [
         ("a", BASE),
@@ -90,15 +95,33 @@ def test_minhash_text_kernel_matches_column_mirror(spark):
         ("d", "die straße ist groß und schön"),
         ("e", "καλημέρα κόσμε"),
         ("f", "東京都の天気は晴れです🌞"),
+        ("g", "İSTANBUL ve İzmir"),
+        ("h", "ΟΔΟΣ ΣΟΦΟΣ Σ"),
+        ("i", "STRASSE straße GROẞ"),
+        ("j", "ﬁne ﬂow ﬁle"),
+        ("k", "ǅemal ǄEMAL ǆemal"),
+        ("l", "東京 大阪 京都"),
+        ("m", "sunny 🌞 rain 🌧 sunny 🌞"),
+        ("n", "tab\tseparated  words\t "),
+        ("o", None),
     ]
     df = spark.createDataFrame(texts, "doc_id string, text string")
-    got = df.select(
+    # MinHash drops null texts before its kernel runs
+    got = df.filter(F.col("text").isNotNull()).select(
         "doc_id",
         _minhash_text_udf(128, 3)(F.col("text")).alias("kernel"),
         minhash_udf(128)(shingles_col(F.col("text"), 3)).alias("mirror"),
     ).collect()
+    assert len(got) == len(texts) - 1
+    assert all(r.kernel == r.mirror for r in got)
+    got = df.select(
+        "doc_id",
+        _simhash_text_udf()(F.col("text")).alias("kernel"),
+        simhash_col(F.col("text")).alias("mirror"),
+    ).collect()
     assert len(got) == len(texts)
     assert all(r.kernel == r.mirror for r in got)
+    assert [r.doc_id for r in got if r.kernel is None] == ["o"]
 
 
 def test_ngram_canonicalize_with_block(spark, planted):

@@ -91,3 +91,31 @@ def test_engine_pipeline_ops(eng, spark, tmp_path):
     got = eng.attr_scan(path, "user_id", 7).count()
     want = ev.filter("user_id = 7").count()
     assert got == want > 0
+
+
+def test_attach_rebuilds_a_stale_package_zip(tmp_path, monkeypatch):
+    """attach() ships a zip of the package's current sources: a stale zip
+    left at the same path is rebuilt, a current one is reused."""
+    import tempfile
+    import types
+    import zipfile
+    from pathlib import Path
+
+    import geomesa_spark
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    zpath = tmp_path / f"geomesa_spark-{geomesa_spark.__version__}.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("geomesa_spark/__init__.py", "STALE = True\n")
+    added = []
+    fake = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=added.append))
+
+    geomesa_spark.attach(fake)
+    pkg = Path(geomesa_spark.__file__).parent
+    want = {f"geomesa_spark/{p.relative_to(pkg).as_posix()}": p.read_bytes() for p in pkg.rglob("*.py")}
+    with zipfile.ZipFile(zpath) as zf:
+        assert {n: zf.read(n) for n in zf.namelist()} == want
+    built = zpath.stat().st_mtime_ns
+    geomesa_spark.attach(fake)
+    assert zpath.stat().st_mtime_ns == built
+    assert added == [str(zpath)] * 2

@@ -32,6 +32,7 @@ from exact_relate import (
 )
 from geomesa_spark.geom import algorithms as alg
 from geomesa_spark.geom.wkt import from_wkt
+from sweep_pool import sweep
 
 PREDICATES = (
     "intersects",
@@ -569,25 +570,35 @@ def _soup(rng: np.random.Generator, n: int):
     return out
 
 
+def _scalar_vs_oracle(left: tuple, rights: list) -> tuple:
+    """One left geometry of the scalar sweep against every right, all
+    predicates in both directions. Runs in a sweep_pool worker; returns
+    (comparisons made, disagreements)."""
+    lw, lo = left
+    ga = from_wkt(lw)
+    bad = []
+    n = 0
+    for rw, ro in rights:
+        gb = from_wkt(rw)
+        truth = predicates(lo, ro)
+        truth_rev = predicates(ro, lo)
+        for p in PREDICATES:
+            n += 2
+            if bool(getattr(alg, p)(ga, gb)) != truth[p]:
+                bad.append((p, "fwd", lw, rw))
+            if bool(getattr(alg, p)(gb, ga)) != truth_rev[p]:
+                bad.append((p, "rev", lw, rw))
+    return n, bad
+
+
 @pytest.mark.parametrize("seed", (1, 2))
 def test_engine_scalar_vs_exact_oracle(seed):
     rng = np.random.default_rng(20260817 + seed)
     lefts = _soup(rng, 55)
     rights = _soup(rng, 30)
-    bad = []
-    n = 0
-    for lw, lo in lefts:
-        ga = from_wkt(lw)
-        for rw, ro in rights:
-            gb = from_wkt(rw)
-            truth = predicates(lo, ro)
-            truth_rev = predicates(ro, lo)
-            for p in PREDICATES:
-                n += 2
-                if bool(getattr(alg, p)(ga, gb)) != truth[p]:
-                    bad.append((p, "fwd", lw, rw))
-                if bool(getattr(alg, p)(gb, ga)) != truth_rev[p]:
-                    bad.append((p, "rev", lw, rw))
+    per_left = sweep(_scalar_vs_oracle, lefts, rights)
+    n = sum(n for n, _ in per_left)
+    bad = [b for _, part in per_left for b in part]
     assert n == len(lefts) * len(rights) * len(PREDICATES) * 2
     assert not bad, (len(bad), bad[:6])
 
@@ -612,6 +623,30 @@ def test_sweep_detects_a_broken_engine():
     assert disagreements >= 10, disagreements
 
 
+def _oracle_truths(left: tuple, rights: list) -> list:
+    """Exact (forward, reverse) predicate truths of one left geometry
+    against every right. Runs in a sweep_pool worker."""
+    _, lo = left
+    return [(predicates(lo, ro), predicates(ro, lo)) for _, ro in rights]
+
+
+def _refine_vs_truths(p: str, lw, rw, truths: list) -> list:
+    """One predicate of the join refine's batch path, both directions,
+    against the exact truths. Runs in a sweep_pool worker."""
+    from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
+
+    fn = _pairwise_predicate_fn(p)
+    got = fn(lw, rw)
+    got_rev = fn(rw, lw)
+    bad = []
+    for (t_fwd, t_rev), g1, g2 in zip(truths, got, got_rev):
+        if bool(g1) != t_fwd[p]:
+            bad.append((p, "fwd"))
+        if bool(g2) != t_rev[p]:
+            bad.append((p, "rev"))
+    return bad
+
+
 @pytest.mark.parametrize("seed", (1,))
 def test_join_refine_batch_vs_exact_oracle(seed):
     """Close the triangle: scalar==oracle above, batch==scalar in the float
@@ -620,30 +655,32 @@ def test_join_refine_batch_vs_exact_oracle(seed):
     import pandas as pd
 
     from geomesa_spark.geom.wkb import to_wkb
-    from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
 
     rng = np.random.default_rng(20260817 + seed)
     lefts = _soup(rng, 55)
     rights = _soup(rng, 30)
-    pairs = [(lo, ro) for _, lo in lefts for _, ro in rights]
     lw = pd.Series(
         [bytes(to_wkb(from_wkt(w))) for w, _ in lefts for _ in rights], dtype=object
     )
     rw = pd.Series(
         [bytes(to_wkb(from_wkt(w))) for _ in lefts for w, _ in rights], dtype=object
     )
-    truths = [(predicates(lo, ro), predicates(ro, lo)) for lo, ro in pairs]
-    bad = []
-    for p in PREDICATES:
-        fn = _pairwise_predicate_fn(p)
-        got = fn(lw, rw)
-        got_rev = fn(rw, lw)
-        for (t_fwd, t_rev), g1, g2 in zip(truths, got, got_rev):
-            if bool(g1) != t_fwd[p]:
-                bad.append((p, "fwd"))
-            if bool(g2) != t_rev[p]:
-                bad.append((p, "rev"))
+    truths = [t for part in sweep(_oracle_truths, lefts, rights) for t in part]
+    bad = [b for part in sweep(_refine_vs_truths, list(PREDICATES), lw, rw, truths) for b in part]
     assert not bad, (len(bad), bad[:6])
+
+
+def _union_vs_specialized(left: tuple, rights: list) -> list:
+    """Non-GC pairs of one left geometry where the generic union assembly
+    and the specialized one disagree. Runs in a sweep_pool worker."""
+    lw, lo = left
+    bad = []
+    for rw, ro in rights:
+        if isinstance(lo, XGC) or isinstance(ro, XGC):
+            continue  # GC pairs have no specialized path to compare
+        if predicates(lo, ro) != predicates_union(lo, ro):
+            bad.append((lw, rw))
+    return bad
 
 
 @pytest.mark.parametrize("seed", (1,))
@@ -656,13 +693,7 @@ def test_union_assembly_cross_check(seed):
     rng = np.random.default_rng(20260817 + seed)
     lefts = _soup(rng, 40)
     rights = _soup(rng, 20)
-    bad = []
-    for lw, lo in lefts:
-        for rw, ro in rights:
-            if isinstance(lo, XGC) or isinstance(ro, XGC):
-                continue  # GC pairs have no specialized path to compare
-            if predicates(lo, ro) != predicates_union(lo, ro):
-                bad.append((lw, rw))
+    bad = [b for part in sweep(_union_vs_specialized, lefts, rights) for b in part]
     assert not bad, (len(bad), bad[:4])
 
 

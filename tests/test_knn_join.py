@@ -58,16 +58,20 @@ def test_knn_join_ten_thousand_queries(spark, docs):
         assert have == want, row.query_id
 
 
+# a pole-adjacent and an antimeridian query among them
+PROCESS_QUERIES = [
+    ("qa", 10.0, 5.0),
+    ("qb", -179.9, 0.0),
+    ("qc", 59.0, 29.5),
+    ("qd", 0.0, -29.9),
+]
+
+
 def test_knn_join_matches_process_knn(spark, docs):
     """Same fixtures through both formulations -> identical (query, doc)
     row sets, including a pole-adjacent and an antimeridian query; an empty
     query list gives no rows under the same result schema."""
-    qs = [
-        ("qa", 10.0, 5.0),
-        ("qb", -179.9, 0.0),
-        ("qc", 59.0, 29.5),
-        ("qd", 0.0, -29.9),
-    ]
+    qs = PROCESS_QUERIES
     # max radius 2e7 m so the antimeridian query reaches the doc region
     # (docs live in lon [-60, 60]; qb's window must wrap +-180)
     out = knn(docs, qs, k=4, start_radius_m=100_000.0, max_radius_m=2.0e7)
@@ -82,6 +86,48 @@ def test_knn_join_matches_process_knn(spark, docs):
         ).select("query_id", "doc_id").collect()
     }
     assert proc == join and len(proc) == 16
+
+
+def test_knn_rows_round_trip_exactly(spark, docs):
+    """knn builds its result from the rows it collects: every returned row
+    equals its source docs row in every column (binary, array<struct>,
+    timestamp, date and null values), also under a non-UTC session time
+    zone."""
+    d = docs.withColumn("blob", F.when(F.col("x") > 0, F.col("geom_wkb"))).withColumn(
+        "note", F.when(F.col("y") > 0, F.lit("north"))
+    )
+    src = {r.doc_id: tuple(r) for r in d.collect()}
+    qs = PROCESS_QUERIES
+    point = {q: (lon, lat) for q, lon, lat in qs}
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            out = knn(d, qs, k=4, start_radius_m=100_000.0, max_radius_m=2.0e7)
+            assert out.dtypes == d.dtypes + [("query_id", "string"), ("dist_m", "double")]
+            rows = out.collect()
+            assert len(rows) == 16
+            assert {r.blob is None for r in rows} == {True, False}
+            assert {r.note is None for r in rows} == {True, False}
+            for r in rows:
+                assert tuple(r)[:-2] == src[r.doc_id], (tz, r.doc_id)
+                assert r.dist_m == pytest.approx(haversine(r.x, r.y, *point[r.query_id]))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
+def test_knn_rejects_duplicate_query_ids(spark, docs):
+    """Two queries under one id would be ranked as one query: knn refuses
+    them before any Spark job runs."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "knn-duplicate-ids")
+    try:
+        for qs in ([("q", 10.0, 5.0), ("q", 10.0, 5.0)], [("q", 10.0, 5.0), ("q", 0.0, -29.9)]):
+            with pytest.raises(ValueError, match="distinct"):
+                knn(docs, qs, k=3)
+        assert sc.statusTracker().getJobIdsForGroup("knn-duplicate-ids") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_knn_join_max_radius_truncates(spark, docs):

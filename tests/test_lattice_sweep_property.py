@@ -11,10 +11,11 @@ _pairwise_predicate_fn for all 7 predicates in both directions —
 ~100k comparisons — must agree with the scalar relate everywhere.
 
 Seeded and deterministic; runtime is bounded by the scalar side (~100k
-small relate calls, ~40 s per step on this host — the densest permanent
-guard in the suite, kept at full density because sparser random sweeps
-provably missed these gaps).  If this test must shrink, cut N_LEFT/N_RIGHT
-rather than the predicate or direction coverage.
+small relate calls per step — the densest permanent guard in the suite,
+kept at full density because sparser random sweeps provably missed these
+gaps), so each predicate runs as its own task in a tests/sweep_pool process
+pool.  If this test must shrink, cut N_LEFT/N_RIGHT rather than the
+predicate or direction coverage.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ import pytest
 from geomesa_spark.geom import algorithms as alg
 from geomesa_spark.geom.wkb import to_wkb
 from geomesa_spark.geom.wkt import from_wkt
+from sweep_pool import sweep
 
 PREDICATES = (
     "intersects",
@@ -93,10 +95,29 @@ def _soup(rng: np.random.Generator, n: int, step: float) -> list:
     return gs
 
 
-@pytest.mark.parametrize("step", STEPS)
-def test_lattice_sweep_all_predicates_both_directions(step):
+def _disagreements(p: str, pairs: list, lw: pd.Series, rw: pd.Series) -> tuple:
+    """One predicate of a sweep: the join refine's batch answer for every
+    (a, b) pair, both directions, against the scalar relate. Runs in a
+    sweep_pool worker; returns (comparisons made, disagreements)."""
     from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
 
+    fn = _pairwise_predicate_fn(p)
+    ref = getattr(alg, p)
+    got = fn(lw, rw)
+    got_rev = fn(rw, lw)
+    bad = []
+    n_cmp = 0
+    for k, ((a, b), g1, g2) in enumerate(zip(pairs, got, got_rev)):
+        n_cmp += 2
+        if bool(g1) != ref(a, b):
+            bad.append((p, "fwd", k))
+        if bool(g2) != ref(b, a):
+            bad.append((p, "rev", k))
+    return n_cmp, bad
+
+
+@pytest.mark.parametrize("step", STEPS)
+def test_lattice_sweep_all_predicates_both_directions(step):
     rng = np.random.default_rng(int(step * 1000) + 20260817)
     lefts = _soup(rng, N_LEFT, step)
     rights = _soup(rng, N_RIGHT, step)
@@ -110,21 +131,12 @@ def test_lattice_sweep_all_predicates_both_directions(step):
     ]
     lw = pd.Series([bytes(to_wkb(lefts[i])) for i, _ in pair_ix], dtype=object)
     rw = pd.Series([bytes(to_wkb(rights[j])) for _, j in pair_ix], dtype=object)
+    pairs = [(lefts[i], rights[j]) for i, j in pair_ix]
 
     t0 = time.time()
-    bad = []
-    n_cmp = 0
-    for p in PREDICATES:
-        fn = _pairwise_predicate_fn(p)
-        ref = getattr(alg, p)
-        got = fn(lw, rw)
-        got_rev = fn(rw, lw)
-        for (i, j), g1, g2 in zip(pair_ix, got, got_rev):
-            n_cmp += 2
-            if bool(g1) != ref(lefts[i], rights[j]):
-                bad.append((p, "fwd", i, j))
-            if bool(g2) != ref(rights[j], lefts[i]):
-                bad.append((p, "rev", i, j))
+    per_p = sweep(_disagreements, list(PREDICATES), pairs, lw, rw)
+    bad = [(p, d, *pair_ix[k]) for _, part in per_p for p, d, k in part]
+    n_cmp = sum(n for n, _ in per_p)
     assert n_cmp == len(pair_ix) * len(PREDICATES) * 2
     assert not bad, (len(bad), bad[:5], f"{n_cmp} comparisons in {time.time()-t0:.1f}s")
 
@@ -236,47 +248,23 @@ def _gc_soup(rng: np.random.Generator, n: int, step: float) -> list:
 
 @pytest.mark.parametrize("step", (0.7, 0.3))
 def test_gc_lattice_sweep(step):
-    from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
-
     rng = np.random.default_rng(int(step * 1000) + 4242)
     lefts = _gc_soup(rng, 60, step)
     rights = _gc_soup(rng, 30, step)
     lw = pd.Series([bytes(to_wkb(a)) for a in lefts for b in rights], dtype=object)
     rw = pd.Series([bytes(to_wkb(b)) for a in lefts for b in rights], dtype=object)
     pairs = [(a, b) for a in lefts for b in rights]
-    bad = []
-    for p in PREDICATES:
-        fn = _pairwise_predicate_fn(p)
-        ref = getattr(alg, p)
-        got = fn(lw, rw)
-        got_rev = fn(rw, lw)
-        for (a, b), g1, g2 in zip(pairs, got, got_rev):
-            if bool(g1) != ref(a, b):
-                bad.append((p, "fwd"))
-            if bool(g2) != ref(b, a):
-                bad.append((p, "rev"))
+    bad = [b for _, part in sweep(_disagreements, list(PREDICATES), pairs, lw, rw) for b in part]
     assert not bad, (len(bad), bad[:5])
 
 
 @pytest.mark.parametrize("step", (0.7, 0.3))
 def test_multi_part_lattice_sweep(step):
-    from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
-
     rng = np.random.default_rng(int(step * 1000) + 777)
     lefts = _multi_soup(rng, 60, step)
     rights = _multi_soup(rng, 30, step)
     lw = pd.Series([bytes(to_wkb(a)) for a in lefts for b in rights], dtype=object)
     rw = pd.Series([bytes(to_wkb(b)) for a in lefts for b in rights], dtype=object)
     pairs = [(a, b) for a in lefts for b in rights]
-    bad = []
-    for p in PREDICATES:
-        fn = _pairwise_predicate_fn(p)
-        ref = getattr(alg, p)
-        got = fn(lw, rw)
-        got_rev = fn(rw, lw)
-        for (a, b), g1, g2 in zip(pairs, got, got_rev):
-            if bool(g1) != ref(a, b):
-                bad.append((p, "fwd"))
-            if bool(g2) != ref(b, a):
-                bad.append((p, "rev"))
+    bad = [b for _, part in sweep(_disagreements, list(PREDICATES), pairs, lw, rw) for b in part]
     assert not bad, (len(bad), bad[:5])

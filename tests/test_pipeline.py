@@ -150,22 +150,31 @@ def test_spatial_join_no_duplicates(spark, join_sides):
 
 
 def test_spatial_join_broadcast_and_salt_same_result(spark, join_sides):
+    """Auto, broadcast and salted shuffle joins give the same pairs. 12,800
+    extra left points share one join cell — over the 10k-row hot-cell floor
+    — so the salted shuffle join takes its hot-cell branch."""
+    from geomesa_spark.sources.docs import index_points_df
+
     left, right = join_sides
-    base = {
-        (r.doc_id, r.doc_id_r)
-        for r in spatial_join(left, right).select("doc_id", "doc_id_r").collect()
-    }
-    bcast = {
-        (r.doc_id, r.doc_id_r)
-        for r in spatial_join(left, right, broadcast=True)
-        .select("doc_id", "doc_id_r")
-        .collect()
-    }
-    salted = {
-        (r.doc_id, r.doc_id_r)
-        for r in spatial_join(left, right, salt=4).select("doc_id", "doc_id_r").collect()
-    }
-    assert base == bcast == salted
+    hot = index_points_df(
+        spark.range(12_800).selectExpr(
+            "format_string('hot-%05d', id) AS doc_id",
+            "0.1 + (id % 128) * 0.02 AS lon",
+            "0.1 + floor(id / 128) * 0.025 AS lat",
+        ),
+        "lon",
+        "lat",
+    )
+    left = left.select("doc_id", "geom_wkb").unionByName(hot.select("doc_id", "geom_wkb"))
+
+    def pairs(df):
+        return {(r.doc_id, r.doc_id_r) for r in df.select("doc_id", "doc_id_r").collect()}
+
+    salted_df = spatial_join(left, right, broadcast=False, salt=4)
+    assert "_salt" in salted_df._jdf.queryExecution().optimizedPlan().toString()
+    base = pairs(spatial_join(left, right))
+    assert base == pairs(spatial_join(left, right, broadcast=True)) == pairs(salted_df)
+    assert any(a.startswith("hot-") for a, _ in base)
 
 
 def test_spatial_join_semi_anti(spark, join_sides):

@@ -23,7 +23,7 @@ from geomesa_spark.operators import processes
 from geomesa_spark.operators.dedup import ngram_jaccard_pairs, minhash_lsh_pairs, simhash_pairs
 from geomesa_spark.operators.density import assign_tiles, density, grid_i, tile_counts
 from geomesa_spark.operators.knn import haversine_col, knn
-from geomesa_spark.operators.similarity import brute_force_topk, ann_topk_lsh, cosine_col
+from geomesa_spark.operators.similarity import brute_force_topk, ann_topk_lsh
 from geomesa_spark.operators.spatial_join import spatial_join
 from geomesa_spark.sources.docs import index_points_df
 
@@ -705,8 +705,10 @@ def q_dedup_components(spark, sf_dir):
     """Duplicate clusters as CONNECTED COMPONENTS (id -> min-member-id) over
     the simhash Hamming<=3 near-dup graph — the scale-safe output shape for
     large duplicate clusters (O(cluster) rows instead of O(cluster^2) raw
-    pairs). Spark side: iterative min-label propagation (dedup_components);
-    oracle: recursive-CTE transitive closure + group-min in DuckDB."""
+    pairs). Spark side: dedup_components — a driver-side union-find when the
+    edge list fits its gather cap (every measured size), else distributed
+    min-label propagation; oracle: recursive-CTE transitive closure +
+    group-min in DuckDB."""
     _init(spark)
     from geomesa_spark.operators.dedup import dedup_components
 

@@ -258,8 +258,9 @@ def locate(px: float, py: float, g: Geometry) -> int:
         # another located INTERIOR for the GC yet BOUNDARY for the
         # equivalent MULTILINESTRING (same part list) — an internal
         # inconsistency found by the r7 GC lattice sweep. Flattened families
-        # make locate(GC) == locate(normalized MULTI) by construction,
-        # which the batch kernels and _normalize_gc routing rely on.
+        # make locate(GC) == locate(equivalent MULTI) by construction,
+        # which the join's point fast path (locate_batch on GC partners)
+        # relies on.
         best = EXTERIOR
         for c in _points_of(g):
             if px == c[0] and py == c[1]:

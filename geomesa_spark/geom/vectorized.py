@@ -834,67 +834,6 @@ def lineal_predicate_batch(
     raise ValueError(f"lineal_predicate_batch: unsupported predicate {predicate}")
 
 
-def lineal_evidence_batch(lines: list[Geometry], other: Geometry) -> dict:
-    """Raw DE-9IM evidence for a batch of LINEAL geometries vs ONE partner
-    (areal or lineal) — the building block for composing predicates over
-    heterogeneous GEOMETRYCOLLECTION dimension families, where per-family
-    NAMED predicates can't express the GC-level matrix but per-family cells
-    can (closure(GC) = union of family closures; interior(GC) = union of
-    family interiors under the engine's min-locate union semantics).
-
-    Returns boolean arrays (one per line): inter (closures meet), ii
-    (interior∩interior nonempty), ie (line interior meets partner exterior),
-    covby (line ⊆ closure(partner), i.e. IE=F and BE=F), ii1 (the II
-    intersection has dimension 1 — collinear overlap). Same PRECONDITION as
-    lineal_predicate_batch: live segments only."""
-    f = _classify_lineal_batch(lines, other)
-    II = f["in1"] | f["pti_i"]
-    IE = f["out1"] | f["pte_i"]
-    IB = f["on1"] | f["ptb_i"]
-    BI = f["pti_b"]
-    BB = f["ptb_b"]
-    BE = f["pte_b"]
-    return {
-        "inter": II | IB | BI | BB,
-        "ii": II,
-        "ie": IE,
-        "covby": ~(IE | BE),
-        "ii1": f["in1"],
-    }
-
-
-def multipoint_evidence_batch(mps: list[Geometry], other: Geometry) -> dict:
-    """Raw DE-9IM evidence for a batch of MULTIPOINT geometries vs ONE
-    areal/lineal partner — see lineal_evidence_batch. Points have empty
-    boundaries, so ii = some member interior to the partner, ie = some
-    member exterior, covby = none exterior; ii1 is identically false
-    (0-dim intersections)."""
-    n = len(mps)
-    pts_parts, owners = [], []
-    for i, g in enumerate(mps):
-        p = alg._points_of(g)
-        pts_parts.append(p)
-        owners.append(np.full(len(p), i, dtype=np.int64))
-    P = np.concatenate(pts_parts) if pts_parts else np.empty((0, 2))
-    own = np.concatenate(owners) if owners else np.empty(0, dtype=np.int64)
-    has_int = np.zeros(n, dtype=bool)
-    has_bnd = np.zeros(n, dtype=bool)
-    has_ext = np.zeros(n, dtype=bool)
-    if len(P):
-        loc = locate_batch(P[:, 0], P[:, 1], other)
-        for code, acc in ((_INT, has_int), (_BND, has_bnd), (_EXT, has_ext)):
-            hit = loc == code
-            if hit.any():
-                np.logical_or.at(acc, own[hit], True)
-    return {
-        "inter": has_int | has_bnd,
-        "ii": has_int,
-        "ie": has_ext,
-        "covby": ~has_ext,
-        "ii1": np.zeros(n, dtype=bool),
-    }
-
-
 def multipoint_predicate_batch(
     mps: list[Geometry],
     other: Geometry,

@@ -2,17 +2,18 @@
 
 Brute-force cosine top-k as the exactness baseline; random-hyperplane LSH
 bucketing as the 100TB scale path (bucket equi-join instead of cross join).
-Dot products are pure Column expressions (zip_with + aggregate -> codegen),
-no Python in the hot path.
+Dot products run as one numpy matmul per Arrow batch: Spark's
+higher-order-function lambdas (zip_with + aggregate) are interpreted per
+element, far too slow for the scan hot paths.
 
 Top-k is orderBy + limit — Spark plans it as TakeOrderedAndProject (each
 partition keeps its local k, the driver merges), NOT a global window, which
 would move every row to a single partition.
 
 Hyperplanes are LITERAL +-1 sign vectors drawn from a seeded generator
-(`hyperplane_signs`), inlined into the Column expression — deterministic,
-engine-independent, and expressible in plain SQL (see oracle.rp_bucket_sql),
-so LSH results are verifiable against an independent engine bit-for-bit.
+(`hyperplane_signs`) — deterministic, engine-independent, and expressible in
+plain SQL (see oracle.rp_bucket_sql), so LSH results are verifiable against
+an independent engine bit-for-bit.
 """
 
 from __future__ import annotations
@@ -21,30 +22,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def dot_col(a, b):
-    """Column-expression dot product. NOTE: higher-order-function lambdas are
-    INTERPRETED per row by Spark (not codegen'd) — this form exists as the
-    SQL-mirrorable definition (oracle parity); the scan hot paths score with
-    cosine_query_udf (batched numpy matmul) instead."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_col(a):
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-
-
-def cosine_col(a, b):
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
 def _topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
@@ -87,8 +64,7 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k vs one query vector: one scan, one top-k reduce
     (no shuffle of the vectors themselves). Scoring is a batched numpy
-    matmul (cosine_query_udf); cosine_col remains the SQL-mirror
-    definition."""
+    matmul (cosine_query_udf); oracle.cosine_sql is its SQL mirror."""
     scored = df.select(
         F.col(id_col),
         F.round(cosine_query_udf(query_vec)(F.col(vec_col)), 6).alias("score"),
@@ -103,42 +79,35 @@ def hyperplane_signs(
     dim: int, bits: int, tables: int = 1, seed: int = 42
 ) -> np.ndarray:
     """Deterministic +-1 hyperplane signs, shape (tables, bits, dim). These are
-    plan-time LITERALS: the same matrix is inlined into Column expressions and
+    plan-time LITERALS: the same matrix drives rp_bucket_ids and is inlined
     into the DuckDB oracle SQL, so bucket assignment is engine-independent."""
     rng = np.random.default_rng(seed)
     return rng.choice([-1.0, 1.0], size=(tables, bits, dim))
 
 
-def rp_bucket_lit_col(vec, signs_2d: np.ndarray):
-    """LSH bucket id from literal sign rows (shape (bits, dim)): bit b is the
-    sign of dot(vec, signs[b]). Pure Column arithmetic (codegen)."""
-    bucket = F.lit(0).cast("long")
-    for b, row in enumerate(signs_2d):
-        lits = F.array(*[F.lit(float(s)) for s in row])
-        proj = F.aggregate(
-            F.zip_with(vec, lits, lambda v, s: v.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
+def rp_bucket_ids(M: np.ndarray, signs: np.ndarray) -> np.ndarray:
+    """LSH bucket ids of the rows of M (n x dim) for literal sign hyperplanes
+    of shape (tables, bits, dim): (n, tables), where bit b of table t is the
+    sign of dot(row, signs[t, b]). ONE matmul over all tables x bits
+    projections."""
+    T, B, D = signs.shape
+    W = signs.reshape(T * B, D).T.copy()  # (dim, tables*bits)
+    proj = M @ W  # (n, tables*bits)
+    bits = (proj > 0).astype(np.int64).reshape(len(M), T, B)
+    return (bits * (np.int64(1) << np.arange(B, dtype=np.int64))).sum(axis=2)
 
 
 def rp_buckets_udf(signs: np.ndarray):
-    """All `tables` LSH buckets of an embedding in ONE Arrow-batched matmul:
-    (batch x dim) @ (dim x tables*bits) -> sign bits -> bucket ids. Spark's
-    higher-order-function lambdas (aggregate/zip_with) are interpreted
-    per-row, so for tables x bits projections the batched numpy path is the
-    fast one; results are bit-identical to rp_bucket_lit_col except for
-    degenerate |proj| < ~1e-12 ties (summation order)."""
+    """All `tables` LSH buckets of an embedding (rp_bucket_ids) in ONE
+    Arrow-batched matmul. Spark's higher-order-function lambdas
+    (aggregate/zip_with) are interpreted per-row, so for tables x bits
+    projections the batched numpy path is the fast one; oracle.rp_bucket_sql
+    is the SQL mirror (bit-identical except for degenerate |proj| < ~1e-12
+    ties, summation order)."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
-    T, B, D = signs.shape
-    W = signs.reshape(T * B, D).T.copy()  # (dim, tables*bits)
-    weights = (np.int64(1) << np.arange(B, dtype=np.int64))
+    D = signs.shape[2]
 
     def f(vecs):  # no hints (local-import annotations trap)
         mask = vecs.map(lambda v: v is not None and len(v) == D)
@@ -147,10 +116,7 @@ def rp_buckets_udf(signs: np.ndarray):
             M = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
             )  # (n, dim)
-            proj = M @ W  # (n, tables*bits)
-            bits = (proj > 0).astype(np.int64).reshape(len(M), T, B)
-            buckets = (bits * weights).sum(axis=2)  # (n, tables)
-            vals = iter(buckets)
+            vals = iter(rp_bucket_ids(M, signs))
             for i in np.nonzero(mask.to_numpy())[0]:
                 out[i] = next(vals).tolist()
         return pd.Series(out, dtype=object)
@@ -158,46 +124,14 @@ def rp_buckets_udf(signs: np.ndarray):
     return F.pandas_udf(f, ArrayType(LongType()))
 
 
-def cosine_pairs_udf():
-    """Exact cosine of two embedding columns, one numpy pass per Arrow batch
-    (the verify hot path for candidate pairs)."""
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    def f(a, b):
-        out = np.full(len(a), np.nan)
-        ok = [
-            i
-            for i in range(len(a))
-            if a.iloc[i] is not None and b.iloc[i] is not None
-        ]
-        if ok:
-            A = np.stack([np.asarray(a.iloc[i], dtype=np.float64) for i in ok])
-            Bm = np.stack([np.asarray(b.iloc[i], dtype=np.float64) for i in ok])
-            cos = (A * Bm).sum(axis=1) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(Bm, axis=1)
-            )
-            out[ok] = cos
-        s = pd.Series(out)
-        return s.where(~np.isnan(out), None).astype(object)
-
-    return F.pandas_udf(f, DoubleType())
-
-
-def rp_bucket_np(vecs: np.ndarray, signs_2d: np.ndarray) -> np.ndarray:
-    """Same bucket function over numpy rows (driver-side query bucketing)."""
-    proj = vecs @ signs_2d.T  # (n, bits)
-    return ((proj > 0).astype(np.int64) << np.arange(signs_2d.shape[0])).sum(axis=1)
-
-
 # ------------------------------------------------------------------ IVF ANN
 
 
 def random_codebook(dim: int, n_centroids: int = 16, seed: int = 7) -> np.ndarray:
     """Deterministic unit-norm codebook (a data-independent coarse
-    quantizer). Like hyperplane_signs, these are plan-time LITERALS inlined
-    into both the Column expression and the DuckDB oracle SQL, so IVF
-    assignment is engine-independent and gate-checkable."""
+    quantizer). Like hyperplane_signs, these are plan-time LITERALS: the same
+    matrix drives ivf_assign_udf and is inlined into the DuckDB oracle SQL,
+    so IVF assignment is engine-independent and gate-checkable."""
     rng = np.random.default_rng(seed)
     C = rng.normal(size=(n_centroids, dim))
     return C / np.linalg.norm(C, axis=1, keepdims=True)
@@ -565,11 +499,11 @@ def ann_topk_lsh(
     bucket is computed driver-side in numpy (zero extra Spark jobs)."""
     qv = np.asarray(query_vec, dtype=np.float64)
     signs3 = hyperplane_signs(len(query_vec), bits, tables=1, seed=seed)
-    qbucket = int(rp_bucket_np(qv[None, :], signs3[0])[0])
+    qbucket = int(rp_bucket_ids(qv[None, :], signs3)[0, 0])
     buckets = [qbucket] + [qbucket ^ (1 << i) for i in range(min(probes, bits))]
 
     # bucket assignment + scoring are both single Arrow-batched matmuls
-    # (rp_bucket_lit_col / cosine_col stay as the SQL-mirror definitions)
+    # (oracle.rp_bucket_sql / oracle.cosine_sql are their SQL mirrors)
     bdf = df.withColumn("_bkt", F.get(rp_buckets_udf(signs3)(F.col(vec_col)), 0))
     cand = bdf.filter(F.col("_bkt").isin(buckets))
     scored = cand.select(

@@ -35,10 +35,8 @@ from ..geom.vectorized import (
     areal_overlaps_batch,
     areal_touches_batch,
     areal_within_batch,
-    lineal_evidence_batch,
     lineal_predicate_batch,
     locate_batch,
-    multipoint_evidence_batch,
     multipoint_predicate_batch,
     points_from_wkb,
     points_in_polygon,
@@ -175,58 +173,6 @@ def _rect_pair_predicate(predicate: str, A, B) -> bool | None:
     if predicate == "crosses":
         return False  # areal x areal can never cross (dim rule)
     return None
-
-
-def _normalize_gc(g):
-    """Homogeneous GEOMETRYCOLLECTION -> the equivalent MULTI geometry.
-
-    Exact under this engine's union semantics: the scalar relate/locate
-    flatten GCs through _points_of/_lines_of/_polygons_of, and the MULTI
-    built from those same part lists yields identical results — so a GC of
-    polygons routes through the areal batch kernels (simple_parts guard
-    included), a GC of lines through the lineal kernel, a GC of points
-    through the multipoint kernel (VERDICT r6 #3). Heterogeneous (mixed
-    dimension families) and empty GCs return unchanged; non-GC input
-    returns unchanged."""
-    if g.gtype != gcore.GEOMETRYCOLLECTION:
-        return g
-    polys = alg._polygons_of(g)
-    lines = alg._lines_of(g)
-    pts = alg._points_of(g)
-    fams = (len(polys) > 0) + (len(lines) > 0) + (len(pts) > 0)
-    if fams != 1:
-        return g
-    if polys:
-        return gcore.Geometry(gcore.MULTIPOLYGON, polys)
-    if lines:
-        return gcore.Geometry(gcore.MULTILINESTRING, lines)
-    return gcore.Geometry(gcore.MULTIPOINT, [list(map(float, p)) for p in pts])
-
-
-def _gc_family_subs(g):
-    """Decompose a (heterogeneous) GC into its dimension-family MULTI
-    geometries: [(MULTIPOLYGON?), (MULTILINESTRING?), (MULTIPOINT?)].
-    Union-of-families equals the GC's point set, so OR over per-family
-    verdicts is exact for `intersects`."""
-    subs = []
-    polys = alg._polygons_of(g)
-    if polys:
-        subs.append(gcore.Geometry(gcore.MULTIPOLYGON, polys))
-    lines = alg._lines_of(g)
-    if lines:
-        subs.append(gcore.Geometry(gcore.MULTILINESTRING, lines))
-    pts = alg._points_of(g)
-    if len(pts):
-        subs.append(gcore.Geometry(gcore.MULTIPOINT, [list(map(float, p)) for p in pts]))
-    return subs
-
-
-def _live_segs(g) -> bool:
-    """Geometry-object analog of the has_segs byte-cache guard."""
-    return any(
-        len(a) >= 2 and bool((np.asarray(a)[:-1, :2] != np.asarray(a)[1:, :2]).any())
-        for a in alg._lines_of(g)
-    )
 
 
 def _ring_segments(rings) -> np.ndarray:
@@ -509,23 +455,15 @@ def _pairwise_predicate_fn(predicate: str):
         # the vectorized ray-cast/crossing kernels; lineal x areal, lineal x
         # lineal and areal x lineal pairs batch through the segment-split
         # classification kernels (lineal side concatenated, ONE chunked S x E
-        # parameter broadcast per group). Geometry collections route through
-        # the same kernels (r7): HOMOGENEOUS GCs normalize to the equivalent
-        # MULTI geometry (exact — the scalar flattens GCs identically), and
-        # heterogeneous GCs decompose into dimension-family subs whose
-        # per-family verdicts OR together (union semantics; intersects only).
-        # Per-pair Python remains only for degenerate members and
-        # heterogeneous GCs under non-intersects predicates.
+        # parameter broadcast per group). Per-pair Python remains for
+        # degenerate members and GEOMETRYCOLLECTION pairs (scalar relate).
         #
         # Group entries are (row index, member Geometry); the ONE partner
-        # geometry per group lives in partner_of[key]. A row may appear in
-        # several groups (heterogeneous-GC families) — verdicts OR-combine.
+        # geometry per group lives in partner_of[key].
         areal_groups: dict[object, list[tuple[int, object]]] = {}
-        # keyed ("l"|"r"|"pl"|"pr"|"gr", partner bytes): "l" = lineal LEFT
+        # keyed ("l"|"r"|"pl"|"pr", partner bytes): "l" = lineal LEFT
         # grouped by right partner; "r" = lineal RIGHT grouped by left
-        # polygon; "pl"/"pr" = multipoint side; "gr" = a het-GC's areal
-        # family vs a lineal partner (batch runs over the partner lines,
-        # keyed by the GC bytes so it cannot collide with "r" groups)
+        # polygon; "pl"/"pr" = multipoint side
         mixed_groups: dict[tuple[str, bytes], list[tuple[int, object]]] = {}
         partner_of: dict[object, object] = {}
 
@@ -533,21 +471,8 @@ def _pairwise_predicate_fn(predicate: str):
             groups_dict.setdefault(key, []).append((i, member_geom))
             partner_of[key] = partner_geom
 
-        def accum(i, v: bool):
-            prev = out[i]
-            out[i] = bool(v) if prev is None else (prev or bool(v))
-
         seg_ok: dict[bytes, bool] = {}
         area_ok: dict[bytes, bool] = {}
-        norm_cache: dict[bytes, object] = {}
-
-        def norm(b):
-            g = norm_cache.get(b)
-            if g is None:
-                g = _normalize_gc(geo(b))
-                if len(norm_cache) < 8192:
-                    norm_cache[b] = g
-            return g
 
         def pos_area(b):
             # degenerate zero-area polygons (a point or segment dressed as
@@ -603,203 +528,6 @@ def _pairwise_predicate_fn(predicate: str):
                 pt_type in lineal_types and has_segs(pb)
             )
 
-        # heterogeneous-GC rows under the FULL predicate family (r8): the
-        # named per-family predicates can't express the GC-level DE-9IM
-        # matrix, but per-family CELLS can — under the engine's min-locate
-        # union semantics, interior(GC) = union of family interiors and
-        # closure(GC) = union of family closures, so:
-        #   within(GC,B)  = AND_f covby(f,B)        AND OR_f ii(f,B)
-        #   covers(B,GC)  = AND_f covby(f,B)
-        #   touches       = OR_f inter(f,B)         AND AND_f NOT ii(f,B)
-        #   crosses, dim(GC) < dim(B):  OR_f ii  AND OR_f ie
-        #   crosses, dim(GC) = dim(B) = 1: OR_f ii AND no lineal family
-        #       with a 1-dim II (dim of a union = max of dims)
-        #   crosses, areal GC family vs areal B: equal dims -> False
-        # Container-direction / overlaps / cross_gt need B-vs-union
-        # evidence; they batch through REVERSE coverage (B against each
-        # family). For 2-dim B the areal-family covby is exact (measure-
-        # zero families cannot cover an open set); a 1-dim B that escapes
-        # EACH family individually may still be JOINTLY covered — only
-        # those rows fall back to the scalar.
-        het_ev_groups: dict[tuple[str, bytes], list[tuple[int, object]]] = {}
-        het_partner: dict[tuple[str, bytes], object] = {}
-        het_state: dict[int, dict] = {}
-
-        def _push_ev(kind, key, partner, i, member):
-            het_ev_groups.setdefault((kind, key), []).append((i, member))
-            het_partner[(kind, key)] = partner
-
-        def push_het_full(i, het_g, het_b, partner_g, partner_b, gc_side) -> bool:
-            """Route a heterogeneous-GC row under within/contains/covers/
-            touches/crosses through per-family evidence batching. Returns
-            False (leave to the scalar path) for non-decomposable
-            directions or degenerate members/partners."""
-            pt = partner_g.gtype
-            p_areal = pt in areal_types and pos_area(partner_b)
-            p_lineal = pt in lineal_types and has_segs(partner_b)
-            if not (p_areal or p_lineal):
-                return False
-            subs = _gc_family_subs(het_g)
-            if not subs:
-                return False
-            has_areal_fam = any(s.gtype == gcore.MULTIPOLYGON for s in subs)
-            gc_dim = 2 if has_areal_fam else (
-                1 if any(s.gtype == gcore.MULTILINESTRING for s in subs) else 0
-            )
-            if predicate == "within":
-                kind = "cover_b" if gc_side == "l" else "in_gc"
-            elif predicate == "contains":
-                # contains(GC, B) == within(B, GC); contains(B, GC) == cover_b
-                kind = "cover_b" if gc_side == "r" else "in_gc"
-            elif predicate == "covers":
-                kind = "covby_all" if gc_side == "r" else "covby_gc"
-            elif predicate == "touches":
-                kind = "touch"
-            elif predicate == "overlaps":
-                p_dim = 2 if p_areal else 1
-                if gc_dim != p_dim:
-                    out[i] = False  # unequal dims never overlap
-                    return True
-                kind = "overlap2" if p_dim == 2 else "overlap1"
-            elif predicate == "crosses":
-                p_dim = 2 if p_areal else 1
-                if gc_dim == 2:
-                    if p_dim == 2:
-                        out[i] = False  # equal 2-dim never crosses
-                        return True
-                    kind = "cross_gt"  # dim(GC) > dim(B): EI via rev covby
-                else:
-                    kind = "cross_le" if p_dim == 2 else "cross_ll"
-            else:
-                return False
-            p2_sub = next(
-                (s for s in subs if s.gtype == gcore.MULTIPOLYGON), None
-            )
-            p1_sub = next(
-                (s for s in subs if s.gtype == gcore.MULTILINESTRING), None
-            )
-            if kind in ("in_gc", "covby_gc") and p_areal and p2_sub is None:
-                out[i] = False  # a 2-dim B can never sit inside a dim<=1 GC
-                return True
-            plan = []
-            # container-direction / overlaps / cross_gt: reverse-direction
-            # coverage evidence (B against the GC's families). For a 2-dim
-            # B, escape from the areal family is escape from the union
-            # (measure-zero families can't cover an open set), so rev2 is
-            # EXACT; for a 1-dim B, each family's covby alone is sufficient
-            # but a JOINT cover (half-in-areal, half-riding-line) is not
-            # family-decomposable — those rows resolve via the scalar.
-            rev2 = kind in ("in_gc", "covby_gc", "overlap2", "cross_gt")
-            rev1 = (
-                kind in ("in_gc", "covby_gc", "cross_gt") and p_lineal
-            ) or kind == "overlap1"
-            if rev2 and p2_sub is not None:
-                if not alg.area(p2_sub) > 0.0:
-                    return False
-                if p_areal:
-                    if not (
-                        _parts_batch_safe(p2_sub) and simple_parts(partner_b)
-                    ):
-                        return False
-                    plan.append(("arv", het_b, p2_sub, partner_g))
-                elif kind == "covby_gc":
-                    # no forward plan for covby_gc; otherwise the "arl"
-                    # entry below carries covby_rev2 in the same kernel call
-                    plan.append(("lrev2", het_b, p2_sub, partner_g))
-            if rev1 and p1_sub is not None:
-                if not _live_segs(p1_sub):
-                    return False
-                plan.append(("lrev1", het_b, p1_sub, partner_g))
-            # in_gc with an AREAL B needs no forward evidence: B inside
-            # closure(P2) forces II (an open set inside a closure must meet
-            # the interior — boundaries have empty interior), so the verdict
-            # is covby_rev2 alone and the whole row batches on the GC key
-            if kind != "covby_gc" and not (kind == "in_gc" and p_areal):
-                # forward per-family evidence
-                for sub in subs:
-                    st = sub.gtype
-                    if st == gcore.MULTIPOLYGON:
-                        if not alg.area(sub) > 0.0:
-                            return False
-                        if p_areal:
-                            # within/touches evidence runs the areal kernels —
-                            # same parts-safety contract as the main loop.
-                            # ROLES SWAPPED (r8): every needed field is
-                            # role-symmetric (inter/touches) or flips kernel
-                            # (covby(P2,B) == covers(B,P2)), so the members
-                            # are the VARYING partners and the key is the
-                            # GC — one kernel call per GC, not per partner
-                            if not (
-                                _parts_batch_safe(sub)
-                                and simple_parts(partner_b)
-                            ):
-                                return False
-                            plan.append(("ar", het_b, sub, partner_g))
-                        else:
-                            plan.append(("arl", het_b, sub, partner_g))
-                    elif st == gcore.MULTILINESTRING:
-                        if not _live_segs(sub):
-                            return False
-                        plan.append(("lin", partner_b, partner_g, sub))
-                    else:  # MULTIPOINT family
-                        plan.append(("mp", partner_b, partner_g, sub))
-            het_state[i] = {
-                "kind": kind,
-                "covby": True,
-                "ii": False,
-                "inter": False,
-                "ie": False,
-                "ii1": False,
-                "p_areal": p_areal,
-                "covby_rev2": None,
-                "covby_rev1": None,
-            }
-            for fam_kind, key, partner, member in plan:
-                _push_ev(fam_kind, key, partner, i, member)
-            return True
-
-        def push_het_intersects(i, het_g, het_b, partner_g, partner_b) -> bool:
-            """Route a heterogeneous-GC row (intersects only) by pushing one
-            group entry per dimension family; verdicts OR together (the GC's
-            point set is the union of its families). Returns False — leaving
-            the pair to the scalar path — when any family member is
-            degenerate (zero-area polygon, segment-less line) or the partner
-            can't drive the needed kernel."""
-            pt = partner_g.gtype
-            p_areal = pt in areal_types and pos_area(partner_b)
-            p_lineal = pt in lineal_types and has_segs(partner_b)
-            plan = []
-            for sub in _gc_family_subs(het_g):
-                st = sub.gtype
-                if st == gcore.MULTIPOLYGON:
-                    if not alg.area(sub) > 0.0:
-                        return False
-                    if p_areal:
-                        plan.append((areal_groups, partner_b, partner_g, sub))
-                    elif p_lineal:
-                        # batch of partner lines vs the GC's areal family
-                        plan.append((mixed_groups, ("gr", het_b), sub, partner_g))
-                    else:
-                        return False
-                elif st == gcore.MULTILINESTRING:
-                    if not _live_segs(sub):
-                        return False
-                    if p_areal or p_lineal:
-                        plan.append((mixed_groups, ("l", partner_b), partner_g, sub))
-                    else:
-                        return False
-                else:  # MULTIPOINT family
-                    if p_areal or p_lineal:
-                        plan.append((mixed_groups, ("pl", partner_b), partner_g, sub))
-                    else:
-                        return False
-            if not plan:
-                return False  # empty GC -> scalar
-            out[i] = False  # OR-accumulation base
-            for groups_dict, key, partner, member in plan:
-                push(groups_dict, key, partner, i, member)
-            return True
-
         for i in rest:
             if lbytes[i] is None or rbytes[i] is None:
                 out[i] = None
@@ -813,7 +541,7 @@ def _pairwise_predicate_fn(predicate: str):
                         out[i] = v
                         continue
             if batchable:
-                lg, rg = norm(lbytes[i]), norm(rbytes[i])
+                lg, rg = geo(lbytes[i]), geo(rbytes[i])
                 lt, rt = lg.gtype, rg.gtype
                 if (
                     lt in areal_types
@@ -861,157 +589,11 @@ def _pairwise_predicate_fn(predicate: str):
                 ):
                     push(mixed_groups, ("pr", lbytes[i]), lg, i, rg)
                     continue
-                # heterogeneous GC (one side) under intersects: OR over
-                # dimension families, each through its batch kernel
-                l_het = lt == gcore.GEOMETRYCOLLECTION
-                r_het = rt == gcore.GEOMETRYCOLLECTION
-                if predicate == "intersects":
-                    if l_het and not r_het:
-                        if push_het_intersects(i, lg, lbytes[i], rg, rbytes[i]):
-                            continue
-                    elif r_het and not l_het:
-                        # intersects is symmetric: decompose the right GC
-                        # against the left partner with the same machinery
-                        if push_het_intersects(i, rg, rbytes[i], lg, lbytes[i]):
-                            continue
-                elif l_het != r_het and predicate in (
-                    "within", "contains", "covers", "touches", "crosses",
-                    "overlaps",
-                ):
-                    if l_het:
-                        if push_het_full(
-                            i, lg, lbytes[i], rg, rbytes[i], "l"
-                        ):
-                            continue
-                    else:
-                        if push_het_full(
-                            i, rg, rbytes[i], lg, lbytes[i], "r"
-                        ):
-                            continue
             out[i] = bool(fn(geo(lbytes[i]), geo(rbytes[i])))
-        # GC-keyed kinds first, then the per-partner lin/mp groups with a
-        # lazy skip: once an AND-shaped row's areal-family coverage failed,
-        # no further OR-evidence can change its verdict — don't pay the
-        # per-partner kernel for it (covers(B, GC) over many distinct B's
-        # is decided almost entirely by the GC-keyed areal coverage)
-        _EV_LAST = ("lin", "mp")
-        for (fam_kind, key), entries in sorted(
-            het_ev_groups.items(), key=lambda kv: kv[0][0] in _EV_LAST
-        ):
-            if fam_kind in _EV_LAST:
-                entries = [
-                    (i, g)
-                    for i, g in entries
-                    if not (
-                        het_state[i]["kind"] in ("cover_b", "covby_all")
-                        and not het_state[i]["covby"]
-                    )
-                ]
-                if not entries:
-                    continue
-            members = [g for _, g in entries]
-            partner = het_partner[(fam_kind, key)]
-            if fam_kind == "lin":
-                ev = lineal_evidence_batch(members, partner)
-            elif fam_kind == "mp":
-                ev = multipoint_evidence_batch(members, partner)
-            elif fam_kind == "ar":
-                # members are the VARYING partners, partner is the GC's
-                # areal family (see push_het_full): inter/touches are
-                # role-symmetric and family-covered-by-B flips to
-                # covers(B, family)
-                inter_v = areal_intersects_batch(members, partner)
-                touch_v = areal_touches_batch(members, partner)
-                covby_v = areal_covers_batch(members, partner)
-                ev = {
-                    "inter": inter_v,
-                    "ii": inter_v & ~touch_v,
-                    # 2-dim family: some closure point outside closure(B)
-                    # implies interior points outside too
-                    "ie": ~covby_v,
-                    "covby": covby_v,
-                    "ii1": np.zeros(len(members), dtype=bool),
-                }
-            elif fam_kind == "arv":
-                # reverse coverage: areal partner B inside the GC's areal
-                # family (closed-set) — exact for 2-dim B (see push_het_full)
-                ev = {"covby_rev2": areal_within_batch(members, partner)}
-            elif fam_kind in ("lrev2", "lrev1"):
-                lv = lineal_evidence_batch(members, partner)
-                key_name = "covby_rev2" if fam_kind == "lrev2" else "covby_rev1"
-                ev = {key_name: lv["covby"]}
-            else:  # "arl": members are the LINE partners, partner is the
-                # GC's areal family — inter/ii are symmetric; a 2-dim
-                # family is never inside a line's closure, and its
-                # interior always exceeds the line (ie true). The same
-                # kernel output carries the partner's reverse coverage
-                # (covby_rev2) for container-direction rows in the group.
-                lv = lineal_evidence_batch(members, partner)
-                ones = np.ones(len(members), dtype=bool)
-                ev = {
-                    "inter": lv["inter"],
-                    "ii": lv["ii"],
-                    "ie": ones,
-                    "covby": np.zeros(len(members), dtype=bool),
-                    "ii1": np.zeros(len(members), dtype=bool),
-                    "covby_rev2": lv["covby"],
-                }
-            for k, (i, _) in enumerate(entries):
-                st = het_state[i]
-                if "covby_rev2" in ev:
-                    st["covby_rev2"] = bool(ev["covby_rev2"][k])
-                if "covby_rev1" in ev:
-                    st["covby_rev1"] = bool(ev["covby_rev1"][k])
-                if "covby" in ev:
-                    st["covby"] = st["covby"] and bool(ev["covby"][k])
-                    st["ii"] = st["ii"] or bool(ev["ii"][k])
-                    st["inter"] = st["inter"] or bool(ev["inter"][k])
-                    st["ie"] = st["ie"] or bool(ev["ie"][k])
-                    st["ii1"] = st["ii1"] or bool(ev["ii1"][k])
-        for i, st in het_state.items():
-            kind = st["kind"]
-            if kind == "cover_b":
-                out[i] = st["covby"] and st["ii"]
-            elif kind == "covby_all":
-                out[i] = st["covby"]
-            elif kind == "touch":
-                out[i] = st["inter"] and not st["ii"]
-            elif kind == "cross_le":
-                out[i] = st["ii"] and st["ie"]
-            elif kind == "cross_ll":
-                out[i] = st["ii"] and not st["ii1"]
-            elif kind in ("in_gc", "covby_gc"):
-                # coverage of B by the union of families
-                if st["p_areal"]:
-                    # 2-dim B: rev2 is exact and implies II (see push)
-                    out[i] = bool(st["covby_rev2"])
-                elif kind == "in_gc" and not st["ii"]:
-                    out[i] = False
-                elif st["covby_rev2"] or st["covby_rev1"]:
-                    out[i] = True  # one family alone covers the line
-                elif st["covby_rev2"] is not None and st["covby_rev1"] is not None:
-                    # escapes each family individually — a JOINT cover is
-                    # still possible; only these rows pay the scalar
-                    out[i] = bool(fn(geo(lbytes[i]), geo(rbytes[i])))
-                else:
-                    out[i] = False  # single family exists and it missed
-            elif kind == "overlap2":
-                out[i] = st["ii"] and st["ie"] and not st["covby_rev2"]
-            elif kind == "overlap1":
-                out[i] = st["ii1"] and st["ie"] and not st["covby_rev1"]
-            else:  # cross_gt: dim(GC)=2 > dim(B)=1; EI == B escapes union
-                if not st["ii"] or st["covby_rev2"] or st["covby_rev1"]:
-                    out[i] = False
-                elif st["covby_rev1"] is None:
-                    # no line family: escape from the areal family IS
-                    # escape from the union (points are measure-zero)
-                    out[i] = True
-                else:
-                    out[i] = bool(fn(geo(lbytes[i]), geo(rbytes[i])))
         for (side, key), entries in mixed_groups.items():
             members = [g for _, g in entries]
             partner = partner_of[(side, key)]
-            if side in ("l", "r", "gr"):
+            if side in ("l", "r"):
                 verdict = lineal_predicate_batch(
                     members,
                     partner,
@@ -1026,7 +608,7 @@ def _pairwise_predicate_fn(predicate: str):
                     points_side="left" if side == "pl" else "right",
                 )
             for k, (i, _) in enumerate(entries):
-                accum(i, verdict[k])
+                out[i] = bool(verdict[k])
         for rb_key, entries in areal_groups.items():
             idxs = [i for i, _ in entries]
             Ls = [g for _, g in entries]
@@ -1048,7 +630,7 @@ def _pairwise_predicate_fn(predicate: str):
                 # necessarily interior to the cover
                 verdict = areal_covers_batch(Ls, R)
             for k, i in enumerate(idxs):
-                accum(i, verdict[k])
+                out[i] = bool(verdict[k])
         return pd.Series(out, dtype=object)
 
     return pred

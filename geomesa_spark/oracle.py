@@ -100,12 +100,14 @@ def cosine_sql(a: str, b: str) -> str:
 
 
 def rp_proj_sql(vec: str, signs_row) -> str:
-    """Dot product of a list column with a LITERAL +-1 sign row — mirrors
-    similarity.rp_bucket_lit_col bit projections exactly."""
+    """Dot product of a list column with a LITERAL +-1 sign row — the bit
+    projections of similarity.rp_bucket_ids. The literal list is zipped with
+    the vector ONCE: indexing it inside the comprehension makes DuckDB
+    rebuild the whole literal for every element."""
     lits = "[" + ", ".join(f"{float(s):.1f}" for s in signs_row) + "]"
     return (
-        f"list_sum([cast({vec}[__pj] as double) * ({lits})[__pj] "
-        f"for __pj in range(1, {len(signs_row) + 1})])"
+        f"list_sum([cast(__p[1] as double) * __p[2] "
+        f"for __p in list_zip({vec}, {lits})])"
     )
 
 

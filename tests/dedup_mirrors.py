@@ -5,14 +5,15 @@ simhash signatures inside Arrow batches. The forms here build the same
 values from Spark built-ins (interpreted transform/aggregate lambdas, far
 too slow for the hot paths), so tests can check the kernels against an
 independent, SQL-mirrorable definition; geomesa_spark.oracle holds the
-DuckDB counterparts."""
+DuckDB counterparts. cosine_pairs_udf is the per-pair reference the
+embedding bucket kernel is checked against."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from geomesa_spark.operators.dedup import SIMHASH_BITS
 
@@ -93,3 +94,27 @@ def simhash_col(text_col, bits: int = SIMHASH_BITS):
     return F.when(
         text_col.isNotNull(), simhash_from_hashes(token_hashes_col(text_col), bits)
     )
+
+
+def cosine_pairs_udf():
+    """Exact cosine of two embedding columns, one numpy pass per Arrow
+    batch (null when either side is null)."""
+
+    def f(a, b):
+        out = np.full(len(a), np.nan)
+        ok = [
+            i
+            for i in range(len(a))
+            if a.iloc[i] is not None and b.iloc[i] is not None
+        ]
+        if ok:
+            A = np.stack([np.asarray(a.iloc[i], dtype=np.float64) for i in ok])
+            Bm = np.stack([np.asarray(b.iloc[i], dtype=np.float64) for i in ok])
+            cos = (A * Bm).sum(axis=1) / (
+                np.linalg.norm(A, axis=1) * np.linalg.norm(Bm, axis=1)
+            )
+            out[ok] = cos
+        s = pd.Series(out)
+        return s.where(~np.isnan(out), None).astype(object)
+
+    return F.pandas_udf(f, DoubleType())

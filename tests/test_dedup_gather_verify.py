@@ -123,11 +123,11 @@ def test_embedding_bucket_kernel_matches_join_reference(spark):
     repeated id (no self-pair) and a null id (never paired)."""
     from geomesa_spark.operators.dedup import _attach, _bucket_guard
     from geomesa_spark.operators.similarity import (
-        cosine_pairs_udf,
         hyperplane_signs,
         rp_buckets_udf,
         synth_embeddings,
     )
+    from dedup_mirrors import cosine_pairs_udf
 
     emb = synth_embeddings(spark, 1500, partitions=8)
     twin = emb.orderBy("vec_id").first()

@@ -384,7 +384,7 @@ def _soup(rng: np.random.Generator, n: int):
             wkt = "POLYGON ((" + ", ".join(f"{x} {y}" for x, y in ring) + "))"
             out.append((wkt, shape))
         elif kind < 22:  # homogeneous GEOMETRYCOLLECTION of 2 linestrings:
-            # the engine normalizes to MULTILINESTRING (_normalize_gc, r7);
+            # the engine's relate flattens it into its line family, so
             # exact truth is the equivalent XMultiLine (incl. mod-2 at a
             # forced shared endpoint 1-in-3)
             members = []

@@ -221,11 +221,11 @@ def test_segs_intersect_any_chunked_matches_block(monkeypatch):
 
 
 def test_spatial_join_gc_full_predicate_parity(spark):
-    """JOIN-level row-set parity for heterogeneous GEOMETRYCOLLECTIONs on
-    BOTH sides of the full predicate family — covers the r8 per-family
-    evidence batching (covered AND container directions) through the whole
-    join pipeline (cover cells, reference-cell dedupe, batch refine), not
-    just _pairwise_predicate_fn."""
+    """JOIN-level row-set parity for heterogeneous GEOMETRYCOLLECTIONs under
+    every join predicate (covered AND container directions: within/covers
+    vs contains) against the brute-force scalar relate, through the whole
+    join pipeline (cover cells, reference-cell dedupe, refine), not just
+    _pairwise_predicate_fn."""
     rng = np.random.default_rng(88)
 
     def rect(x0, y0, w, h):
@@ -263,7 +263,11 @@ def test_spatial_join_gc_full_predicate_parity(spark):
     )
     lg = {i: from_wkt(w) for i, w in lefts}
     rg = {j: from_wkt(w) for j, w in rights}
-    for pred in ("within", "covers", "overlaps", "crosses", "contains", "touches"):
+    preds = (
+        "within", "covers", "overlaps", "crosses", "contains", "touches",
+        "intersects", "equals",
+    )
+    for pred in preds:
         got = set(
             map(
                 tuple,
@@ -281,6 +285,8 @@ def test_spatial_join_gc_full_predicate_parity(spark):
             if getattr(alg, pred)(lg[i], rg[j])
         }
         assert got == want, (pred, len(got), len(want), list(got ^ want)[:4])
+        if pred == "intersects":
+            assert want  # the soup is not vacuous
 
 
 def test_spatial_join_equals(spark):

@@ -78,7 +78,7 @@ class GeoEngine:
         out = df
         if geometry is not None or interval is not None:
             # geom_kind="points" declares an all-points table: the refine is
-            # the x/y ray cast alone and never references geom_wkb
+            # the x/y locate alone and never references geom_wkb
             qp = planner.plan(geometry, predicate, interval, loose, geom_kind=geom_kind)
             out = planner.apply_plan(out, qp)
         if sampling:

@@ -726,10 +726,6 @@ def covers(a: Geometry, b: Geometry) -> bool:
     )
 
 
-def covered_by(a, b) -> bool:
-    return covers(b, a)
-
-
 def touches(a: Geometry, b: Geometry) -> bool:
     m = relate(a, b)
     return m[0] == "F" and (m[1] != "F" or m[3] != "F" or m[4] != "F")
@@ -1381,6 +1377,33 @@ def envelope(g: Geometry) -> Geometry:
     from .core import box
 
     return box(minx, miny, maxx, maxy)
+
+
+def solid_rect_bounds(g: Geometry) -> tuple[float, float, float, float] | None:
+    """Bounds of `g` when it is a SOLID axis-aligned rectangle of positive
+    width and height (one part, no holes, the 4 distinct bbox corners in
+    adjacent-corner order), else None. Vertices-on-corners alone would
+    admit a triangle with a doubled corner or a corner bowtie, which are
+    not solid rectangles; zero-width boxes have different DE-9IM boundary
+    semantics. Callers answer predicates from these bounds alone."""
+    polys = _polygons_of(g)
+    if len(polys) != 1 or len(polys[0]) != 1:
+        return None
+    r = np.asarray(polys[0][0])
+    if len(r) != 5:
+        return None
+    b = g.bounds()
+    if not (b[0] < b[2] and b[1] < b[3]):
+        return None
+    corners = {(b[0], b[1]), (b[2], b[1]), (b[2], b[3]), (b[0], b[3])}
+    verts = [(float(p[0]), float(p[1])) for p in r[:4, :2]]
+    if set(verts) != corners:
+        return None
+    adjacent = all(
+        (verts[i][0] == verts[(i + 1) % 4][0]) != (verts[i][1] == verts[(i + 1) % 4][1])
+        for i in range(4)
+    )
+    return b if adjacent else None
 
 
 def exterior_ring(g: Geometry) -> Geometry | None:

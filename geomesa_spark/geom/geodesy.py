@@ -89,10 +89,6 @@ def vincenty_inverse(lon1, lat1, lon2, lat2, a=WGS84_A, f=WGS84_F) -> float:
     return b * A * (sigma - deltaSigma)
 
 
-def spheroid_distance(lon1, lat1, lon2, lat2) -> float:
-    return vincenty_inverse(lon1, lat1, lon2, lat2)
-
-
 # ------------------------------------------------------------- CRS transforms
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..geom import algorithms as alg
-from ..geom.vectorized import points_in_polygon
+from ..geom.vectorized import locate_batch
 from ..geom.wkb import from_wkb
 from ..index.tiles import GridSnap, bresenham_cells
 
@@ -114,7 +114,7 @@ def _render(g, gs: GridSnap) -> list[tuple[int, int]]:
     ii, jj = np.meshgrid(np.arange(i0, i1 + 1), np.arange(j0, j1 + 1), indexing="ij")
     cx = gs.x(ii.ravel())
     cy = gs.y(jj.ravel())
-    mask = points_in_polygon(cx, cy, g, boundary_ok=True)
+    mask = locate_batch(cx, cy, g) != alg.EXTERIOR
     cells = list(zip(ii.ravel()[mask].tolist(), jj.ravel()[mask].tolist()))
     if not cells:
         # degenerate: polygon smaller than one pixel -> its centroid pixel

@@ -15,7 +15,9 @@ Spark-first plan:
   repartition/join on (cx, cy)        -> hash or broadcast equi-join (AQE skew)
   bbox overlap + reference-cell guard -> plain Column arithmetic, codegen'd
   exact predicate                     -> Arrow pandas UDF (vectorized
-                                         point-in-polygon fast path)
+                                         locate / intersects / lineal
+                                         batches, scalar relate for the
+                                         rest; see _pairwise_predicate_fn)
 
 Scale notes: the equi-join shuffles once on the grid key; hot cells are
 handled by AQE skew-join splitting plus the optional `salt` knob which
@@ -30,16 +32,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..geom.vectorized import (
-    areal_covers_batch,
     areal_intersects_batch,
-    areal_overlaps_batch,
-    areal_touches_batch,
-    areal_within_batch,
     lineal_predicate_batch,
     locate_batch,
-    multipoint_predicate_batch,
     points_from_wkb,
-    points_in_polygon,
 )
 from ..geom.wkb import from_wkb
 from ..geom import algorithms as alg
@@ -123,34 +119,6 @@ def _ref_cell_cond(bits: int):
     )
 
 
-def _rect_info(g) -> tuple[bool, tuple[float, float, float, float] | None]:
-    """(is a NON-degenerate axis-aligned rectangle, bounds). Degenerate
-    rects (zero width/height) are excluded — their DE-9IM boundary semantics
-    differ from solid boxes and they take the generic path."""
-    polys = alg._polygons_of(g)
-    if len(polys) != 1 or len(polys[0]) != 1:
-        return False, None
-    r = np.asarray(polys[0][0])
-    if len(r) != 5:
-        return False, None
-    b = g.bounds()
-    if not (b[0] < b[2] and b[1] < b[3]):
-        return False, None
-    # The 4 non-closing vertices must be the 4 DISTINCT corners in
-    # rectangular (adjacent-corner) order: vertices-on-corners alone admits
-    # degenerate rings (triangle with a doubled corner, corner bowtie) that
-    # are NOT solid rectangles but would take the bounds-only fast path.
-    corners = {(b[0], b[1]), (b[2], b[1]), (b[2], b[3]), (b[0], b[3])}
-    verts = [(float(p[0]), float(p[1])) for p in r[:4, :2]]
-    if set(verts) != corners:
-        return False, None
-    ok = all(
-        (verts[i][0] == verts[(i + 1) % 4][0]) != (verts[i][1] == verts[(i + 1) % 4][1])
-        for i in range(4)
-    )
-    return (True, b) if ok else (False, None)
-
-
 def _rect_pair_predicate(predicate: str, A, B) -> bool | None:
     """Exact DE-9IM predicate for two SOLID axis-aligned rectangles from
     bounds arithmetic alone (closed-set semantics). None = not supported."""
@@ -175,130 +143,25 @@ def _rect_pair_predicate(predicate: str, A, B) -> bool | None:
     return None
 
 
-def _ring_segments(rings) -> np.ndarray:
-    segs = []
-    for r in rings:
-        r = np.asarray(r, dtype=np.float64)
-        segs.append(np.hstack([r[:-1, :2], r[1:, :2]]))
-    return np.concatenate(segs) if segs else np.empty((0, 4))
-
-
-# max broadcast pairs per block in _segs_intersect_any: 2^19 pairs keeps
-# each of the ~8 intermediate (n,m) double arrays at ~4 MB, so a
-# pathological 10k x 10k-segment part pair peaks around 32 MB instead of
-# allocating ~800 MB in one shot (same chunking discipline as the lineal
-# S x E kernel)
-_SEG_PAIR_BLOCK = 1 << 19
-
-
-def _segs_intersect_any(A: np.ndarray, B: np.ndarray) -> bool:
-    """Do ANY segments of sets A (n,4) and B (m,4) intersect (proper
-    crossing, touch, or collinear overlap)? Broadcast orientation tests,
-    chunked so per-call memory is bounded by _SEG_PAIR_BLOCK pairs with
-    early exit on the first intersecting block."""
-    if not len(A) or not len(B):
-        return False
-    if len(A) * len(B) <= _SEG_PAIR_BLOCK:
-        return _segs_intersect_block(A, B)
-    ca = max(1, _SEG_PAIR_BLOCK // len(B))
-    for i in range(0, len(A), ca):
-        Ab = A[i : i + ca]
-        cb = max(1, _SEG_PAIR_BLOCK // len(Ab))
-        for j in range(0, len(B), cb):
-            if _segs_intersect_block(Ab, B[j : j + cb]):
-                return True
-    return False
-
-
-def _segs_intersect_block(A: np.ndarray, B: np.ndarray) -> bool:
-    """One (n,m) broadcast block of the standard d1..d4 sign procedure —
-    callers bound n*m via _SEG_PAIR_BLOCK."""
-    ax, ay, bx, by = (A[:, k][:, None] for k in range(4))
-    cx, cy, dx_, dy_ = (B[:, k][None, :] for k in range(4))
-
-    def cross(ox, oy, px_, py_, qx, qy):
-        return (px_ - ox) * (qy - oy) - (py_ - oy) * (qx - ox)
-
-    d1 = cross(cx, cy, dx_, dy_, ax, ay)
-    d2 = cross(cx, cy, dx_, dy_, bx, by)
-    d3 = cross(ax, ay, bx, by, cx, cy)
-    d4 = cross(ax, ay, bx, by, dx_, dy_)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-    if proper.any():
-        return True
-
-    def on(ox, oy, px_, py_, qx, qy, d):
-        # collinear q on segment (o,p)
-        return (
-            (d == 0)
-            & (qx >= np.minimum(ox, px_))
-            & (qx <= np.maximum(ox, px_))
-            & (qy >= np.minimum(oy, py_))
-            & (qy <= np.maximum(oy, py_))
-        )
-
-    return bool(
-        on(cx, cy, dx_, dy_, ax, ay, d1).any()
-        or on(cx, cy, dx_, dy_, bx, by, d2).any()
-        or on(ax, ay, bx, by, cx, cy, d3).any()
-        or on(ax, ay, bx, by, dx_, dy_, d4).any()
-    )
-
-
-def _parts_batch_safe(g) -> bool:
-    """Can this (multi)polygon's parts drive the areal batch kernels for the
-    containment/overlap/touch family?
-
-    The kernels assume every ring edge is true union boundary, which fails
-    when part interiors overlap or parts share boundary (r6 multi-part
-    sweep). Safe iff the parts' CLOSURES are pairwise disjoint: boundaries
-    never intersect (exact vectorized segment test, replacing the r6
-    envelope-touch over-approximation — a valid archipelago whose part
-    ENVELOPES overlap now stays batched, VERDICT r6 #9) and no part vertex
-    sits strictly inside a sibling (hole-nested parts locate EXTERIOR and
-    remain batch-safe — a part filling a sibling's hole exactly still
-    touches boundary and routes scalar via the segment test)."""
-    polys = alg._polygons_of(g)
-    if len(polys) <= 1:
-        return True
-    envs, segs = [], []
-    for rings in polys:
-        sh = np.asarray(rings[0], dtype=np.float64)
-        envs.append((sh[:, 0].min(), sh[:, 1].min(), sh[:, 0].max(), sh[:, 1].max()))
-        segs.append(_ring_segments(rings))
-    for i in range(len(polys)):
-        for j in range(i + 1, len(polys)):
-            a, c = envs[i], envs[j]
-            if not (a[0] <= c[2] and a[2] >= c[0] and a[1] <= c[3] and a[3] >= c[1]):
-                continue  # envelopes disjoint -> parts disjoint
-            if _segs_intersect_any(segs[i], segs[j]):
-                return False
-            # boundaries disjoint: i is entirely inside one face of j's
-            # arrangement (interior / a hole / outside) and vice versa —
-            # one vertex decides; strict interior means overlapping parts
-            vx, vy = np.asarray(polys[i][0], dtype=np.float64)[0, :2]
-            if alg._locate_in_polygon(float(vx), float(vy), polys[j]) == alg.INTERIOR:
-                return False
-            wx, wy = np.asarray(polys[j][0], dtype=np.float64)[0, :2]
-            if alg._locate_in_polygon(float(wx), float(wy), polys[i]) == alg.INTERIOR:
-                return False
-    return True
-
-
 def _pairwise_predicate_fn(predicate: str):
     """The raw batch function behind _pairwise_predicate_udf — exposed so
     tests can drive the exact refine logic on pandas Series without a Spark
     round trip.
 
-    Fast paths:
-    - point left rows vs few distinct right polygons: one numpy ray-cast per
-      distinct polygon over all its points;
+    Batched paths, each for pair shapes the measured workloads send:
+    - point left rows vs areal / lineal / GEOMETRYCOLLECTION rights
+      (intersects, within, touches, crosses): one locate_batch per distinct
+      right geometry over all its points;
     - solid-rectangle x solid-rectangle pairs (parcel/bbox/tile workloads):
       pure bounds arithmetic, no per-pair geometry calls — rect-ness and
       bounds are computed ONCE per distinct geometry and cached;
+    - areal x areal pairs under `intersects`: areal_intersects_batch per
+      distinct right geometry;
     - lineal x areal / lineal x lineal / areal x lineal pairs: batched
       segment-split classification kernels grouped by the non-lineal (or
-      right) partner."""
+      right) partner.
+    Every other pair (other areal x areal predicates, MULTIPOINT pairs,
+    GEOMETRYCOLLECTION pairs, degenerate members) takes the scalar relate."""
     if predicate == "equals":
         # SFS equals(A, B) == within(A, B) AND within(B, A) — compose the
         # fully-batched within refine in both directions rather than
@@ -366,7 +229,7 @@ def _pairwise_predicate_fn(predicate: str):
         left_is_pt = ~np.isnan(pts[:, 0])
         out = np.empty(n, dtype=object)
         cache: dict[bytes, object] = {}
-        rect_cache: dict[bytes, tuple] = {}
+        rect_cache: dict[bytes, tuple | None] = {}
 
         def geo(b):
             g = cache.get(b)
@@ -377,19 +240,18 @@ def _pairwise_predicate_fn(predicate: str):
             return g
 
         def rect(b):
-            r = rect_cache.get(b)
-            if r is None:
-                r = _rect_info(geo(b))
-                if len(rect_cache) < 8192:
-                    rect_cache[b] = r
+            if b in rect_cache:
+                return rect_cache[b]
+            r = alg.solid_rect_bounds(geo(b))
+            if len(rect_cache) < 8192:
+                rect_cache[b] = r
             return r
 
         # NOTE: 'covers' is deliberately NOT in the fast path — for a point
-        # left row, points_in_polygon answers "right covers left", but the
+        # left row, the locate answers "right covers left", but the
         # predicate is "left covers right" (inverted). Like 'contains', covers
-        # takes the generic path. touches/crosses for point lefts read a
-        # single vectorized locate per distinct right (crosses is vacuously
-        # false for a 0-dim left: II and IE cannot both be non-empty).
+        # takes the generic path. crosses is vacuously false for a 0-dim
+        # left: II and IE cannot both be non-empty.
         lineal_types = (gcore.LINESTRING, gcore.MULTILINESTRING)
         areal_types = (gcore.POLYGON, gcore.MULTIPOLYGON)
         if (
@@ -409,25 +271,7 @@ def _pairwise_predicate_fn(predicate: str):
                 g = geo(rb)
                 ii = np.asarray(idxs)
                 mask = None
-                # the ray-cast shortcut is only sound for PURELY areal
-                # partners: a GC mixing polygons with line/point members has
-                # interior beyond its polygons (a point on the GC's line
-                # member intersects/is-within it under the scalar locate's
-                # union semantics) — mixed partners take the locate_batch
-                # branch, which flattens GCs with the same min-over-members
-                # rule as the scalar
-                purely_areal = (
-                    alg._polygons_of(g)
-                    and not alg._lines_of(g)
-                    and not len(alg._points_of(g))
-                )
-                if predicate in ("intersects", "within") and purely_areal:
-                    mask = points_in_polygon(
-                        pts[ii, 0], pts[ii, 1],
-                        g,
-                        boundary_ok=(predicate == "intersects"),
-                    )
-                elif (
+                if (
                     g.gtype in areal_types
                     or g.gtype in lineal_types
                     or g.gtype == gcore.GEOMETRYCOLLECTION
@@ -451,19 +295,18 @@ def _pairwise_predicate_fn(predicate: str):
             rest = np.nonzero(~left_is_pt)[0]
         else:
             rest = np.arange(n)
-        # non-rect areal x areal pairs batch by distinct right geometry into
-        # the vectorized ray-cast/crossing kernels; lineal x areal, lineal x
-        # lineal and areal x lineal pairs batch through the segment-split
-        # classification kernels (lineal side concatenated, ONE chunked S x E
-        # parameter broadcast per group). Per-pair Python remains for
-        # degenerate members and GEOMETRYCOLLECTION pairs (scalar relate).
+        # non-rect areal x areal intersects pairs batch by distinct right
+        # geometry into the vertex-locate/crossing kernel; lineal x areal,
+        # lineal x lineal and areal x lineal pairs batch through the
+        # segment-split classification kernels (lineal side concatenated,
+        # ONE chunked S x E parameter broadcast per group). Every other pair
+        # takes the scalar relate.
         #
         # Group entries are (row index, member Geometry); the ONE partner
         # geometry per group lives in partner_of[key].
         areal_groups: dict[object, list[tuple[int, object]]] = {}
-        # keyed ("l"|"r"|"pl"|"pr", partner bytes): "l" = lineal LEFT
-        # grouped by right partner; "r" = lineal RIGHT grouped by left
-        # polygon; "pl"/"pr" = multipoint side
+        # keyed ("l"|"r", partner bytes): "l" = lineal LEFT grouped by right
+        # partner; "r" = lineal RIGHT grouped by left polygon
         mixed_groups: dict[tuple[str, bytes], list[tuple[int, object]]] = {}
         partner_of: dict[object, object] = {}
 
@@ -485,20 +328,6 @@ def _pairwise_predicate_fn(predicate: str):
                 v = alg.area(geo(b)) > 0.0
                 if len(area_ok) < 8192:
                     area_ok[b] = v
-            return v
-
-        parts_ok: dict[bytes, bool] = {}
-
-        def simple_parts(b):
-            # multi-part areal batch-safety (see _parts_batch_safe): parts
-            # whose closures are pairwise disjoint keep the batch kernels;
-            # overlapping/edge-sharing parts (invalid OGC, honored by the
-            # scalar's union semantics) route to the scalar path
-            v = parts_ok.get(b)
-            if v is None:
-                v = _parts_batch_safe(geo(b))
-                if len(parts_ok) < 8192:
-                    parts_ok[b] = v
             return v
 
         def has_segs(b):
@@ -523,19 +352,14 @@ def _pairwise_predicate_fn(predicate: str):
             "overlaps", "touches", "crosses",
         )
 
-        def _mp_partner_ok(pb, pt_type):
-            return (pt_type in areal_types and pos_area(pb)) or (
-                pt_type in lineal_types and has_segs(pb)
-            )
-
         for i in rest:
             if lbytes[i] is None or rbytes[i] is None:
                 out[i] = None
                 continue
-            lr, lb = rect(lbytes[i])
-            if lr:
-                rr, rb = rect(rbytes[i])
-                if rr:
+            lb = rect(lbytes[i])
+            if lb is not None:
+                rb = rect(rbytes[i])
+                if rb is not None:
                     v = _rect_pair_predicate(predicate, lb, rb)
                     if v is not None:
                         out[i] = v
@@ -544,14 +368,11 @@ def _pairwise_predicate_fn(predicate: str):
                 lg, rg = geo(lbytes[i]), geo(rbytes[i])
                 lt, rt = lg.gtype, rg.gtype
                 if (
-                    lt in areal_types
+                    predicate == "intersects"
+                    and lt in areal_types
                     and rt in areal_types
                     and pos_area(lbytes[i])
                     and pos_area(rbytes[i])
-                    and (
-                        predicate in ("intersects", "crosses")
-                        or (simple_parts(lbytes[i]) and simple_parts(rbytes[i]))
-                    )
                 ):
                     push(areal_groups, rbytes[i], rg, i, lg)
                     continue
@@ -573,63 +394,21 @@ def _pairwise_predicate_fn(predicate: str):
                 ):
                     push(mixed_groups, ("r", lbytes[i]), lg, i, rg)
                     continue
-                # MULTIPOINT vs areal/lineal: one vectorized locate over
-                # the member points decides every predicate
-                if (
-                    lt == gcore.MULTIPOINT
-                    and len(alg._points_of(lg))
-                    and _mp_partner_ok(rbytes[i], rt)
-                ):
-                    push(mixed_groups, ("pl", rbytes[i]), rg, i, lg)
-                    continue
-                if (
-                    rt == gcore.MULTIPOINT
-                    and len(alg._points_of(rg))
-                    and _mp_partner_ok(lbytes[i], lt)
-                ):
-                    push(mixed_groups, ("pr", lbytes[i]), lg, i, rg)
-                    continue
             out[i] = bool(fn(geo(lbytes[i]), geo(rbytes[i])))
         for (side, key), entries in mixed_groups.items():
             members = [g for _, g in entries]
             partner = partner_of[(side, key)]
-            if side in ("l", "r"):
-                verdict = lineal_predicate_batch(
-                    members,
-                    partner,
-                    predicate,
-                    lineal_side="left" if side == "l" else "right",
-                )
-            else:
-                verdict = multipoint_predicate_batch(
-                    members,
-                    partner,
-                    predicate,
-                    points_side="left" if side == "pl" else "right",
-                )
+            verdict = lineal_predicate_batch(
+                members,
+                partner,
+                predicate,
+                lineal_side="left" if side == "l" else "right",
+            )
             for k, (i, _) in enumerate(entries):
                 out[i] = bool(verdict[k])
         for rb_key, entries in areal_groups.items():
-            idxs = [i for i, _ in entries]
-            Ls = [g for _, g in entries]
-            R = partner_of[rb_key]
-            if predicate == "intersects":
-                verdict = areal_intersects_batch(Ls, R)
-            elif predicate == "within":
-                verdict = areal_within_batch(Ls, R)
-            elif predicate == "overlaps":
-                verdict = areal_overlaps_batch(Ls, R)
-            elif predicate == "touches":
-                verdict = areal_touches_batch(Ls, R)
-            elif predicate == "crosses":
-                # areal x areal can never cross (DE-9IM dimension rule)
-                verdict = np.zeros(len(Ls), dtype=bool)
-            else:
-                # contains == covers for non-degenerate areal pairs: a
-                # covered 2-D geometry has interior points, which are then
-                # necessarily interior to the cover
-                verdict = areal_covers_batch(Ls, R)
-            for k, i in enumerate(idxs):
+            verdict = areal_intersects_batch([g for _, g in entries], partner_of[rb_key])
+            for k, (i, _) in enumerate(entries):
                 out[i] = bool(verdict[k])
         return pd.Series(out, dtype=object)
 

@@ -25,11 +25,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geom import algorithms as alg
-from ..geom.core import Geometry
+from ..geom.core import POLYGON, Geometry
 from ..geom.wkb import to_wkb
 from ..geom.wkt import from_wkt
 from ..index.ranges import zranges_lonlat
@@ -53,7 +54,7 @@ class QueryPlan:
     # point (e.g. index_points_df output). Matters because python UDFs in
     # BOTH branches of a when() are extracted and evaluated for EVERY row —
     # a mixed-table refine pays the per-row WKB predicate even on an
-    # all-points table. "points" refines with the ray cast alone and never
+    # all-points table. "points" refines with the x/y locate alone and never
     # references geom_wkb (so its producing UDF prunes away entirely).
     geom_kind: str = "mixed"
 
@@ -67,17 +68,19 @@ class QueryPlan:
 def _query_bboxes(g: Geometry) -> list[tuple[float, float, float, float]]:
     """Envelope(s) of the query geometry, split at the antimeridian and
     clipped to the world (FilterHelper.scala:101-135 trimToWorld +
-    GeometryProcessing IDL splitting)."""
+    GeometryProcessing IDL splitting): one per polygon part, plus one for
+    the line and point members of a GEOMETRYCOLLECTION, which the exact
+    refine counts too."""
     safe = alg.antimeridian_safe(g)
     polys = alg._polygons_of(safe)
-    out = []
-    if polys:
-        for rings in polys:
-            gg = Geometry(3, rings)
-            b = gg.bounds()
-            out.append(_clip_world(b))
-    else:
-        out.append(_clip_world(safe.bounds()))
+    if not polys:
+        return [_clip_world(safe.bounds())]
+    out = [_clip_world(Geometry(POLYGON, rings).bounds()) for rings in polys]
+    rest = [a[:, :2] for a in alg._lines_of(g) if len(a)] + [alg._points_of(g)]
+    xy = np.concatenate(rest)
+    if len(xy):
+        lo, hi = xy.min(axis=0), xy.max(axis=0)
+        out.append(_clip_world((lo[0], lo[1], hi[0], hi[1])))
     return out
 
 
@@ -118,10 +121,6 @@ def plan(
     g = from_wkt(geometry) if isinstance(geometry, str) else geometry
     bboxes = _query_bboxes(g) if g is not None else []
     cells = _cover_cells(bboxes, cell_bits) if bboxes else []
-    # a rectangular query makes envelope logic exact for intersects on any
-    # geometry whose envelope equals itself; planner treats rect queries as
-    # loose-capable
-    is_rect = g is not None and _is_rectangle(g)
     return QueryPlan(
         bboxes=bboxes,
         predicate=predicate,
@@ -131,21 +130,6 @@ def plan(
         cells=cells,
         geom_kind=geom_kind,
     )
-
-
-def _is_rectangle(g: Geometry) -> bool:
-    polys = alg._polygons_of(g)
-    if len(polys) != 1 or len(polys[0]) != 1:
-        return False
-    import numpy as np
-
-    r = np.asarray(polys[0][0])
-    if len(r) != 5:
-        return False
-    b = g.bounds()
-    xs = {b[0], b[2]}
-    ys = {b[1], b[3]}
-    return all(float(p[0]) in xs and float(p[1]) in ys for p in r)
 
 
 def apply_plan(df: DataFrame, qp: QueryPlan) -> DataFrame:
@@ -202,13 +186,14 @@ def apply_plan(df: DataFrame, qp: QueryPlan) -> DataFrame:
 
 
 def _pip_udf(geometry: Geometry, boundary_ok: bool):
-    """Vectorized ray-cast of (x, y) columns against ONE literal polygon —
-    the hot refine path for point rows: one numpy pass per Arrow batch, no
-    WKB decode (BASELINE.json: 'ray-casting over batched pandas UDFs')."""
+    """Vectorized locate of (x, y) columns against ONE literal areal query
+    geometry — the hot refine path for point rows: one numpy pass per Arrow
+    batch, no WKB decode (BASELINE.json: 'ray-casting over batched pandas
+    UDFs'). boundary_ok counts boundary points; otherwise only interior."""
     import pandas as pd
     from pyspark.sql.types import BooleanType
 
-    from ..geom.vectorized import points_in_polygon
+    from ..geom.vectorized import locate_batch
     from ..geom.wkb import to_wkb as _to_wkb
     from ..geom.wkb import from_wkb as _from_wkb
 
@@ -216,9 +201,8 @@ def _pip_udf(geometry: Geometry, boundary_ok: bool):
 
     def pip(xs, ys):  # no type hints: local-import annotations don't resolve
         g = _from_wkb(qbytes)
-        mask = points_in_polygon(
-            xs.to_numpy(dtype=float), ys.to_numpy(dtype=float), g, boundary_ok
-        )
+        loc = locate_batch(xs.to_numpy(dtype=float), ys.to_numpy(dtype=float), g)
+        mask = loc != alg.EXTERIOR if boundary_ok else loc == alg.INTERIOR
         out = pd.Series(mask)
         out[xs.isna() | ys.isna()] = None
         return out.astype(object)
@@ -231,15 +215,15 @@ def _refine(df: DataFrame, qp: QueryPlan) -> DataFrame:
     rows whose envelope is strictly inside the query bbox are TRUE for
     intersects without touching the UDF (loose-bbox optimization,
     Z3IndexKeySpace.useFullFilter:240-254). Point rows vs an areal query use
-    the vectorized ray-cast on x/y; only extent rows decode WKB."""
+    the vectorized locate on x/y; only extent rows decode WKB."""
     from ..functions.library import UDFS
 
     qwkb = F.lit(bytearray(to_wkb(qp.geometry)))
     pred = qp.predicate
 
     # ALL-POINTS declaration (plan(geom_kind="points"), e.g. tables built by
-    # index_points_df): refine with the x/y ray cast ALONE. The mixed-table
-    # form below wraps the ray cast and the WKB predicate in a when(), and
+    # index_points_df): refine with the x/y locate ALONE. The mixed-table
+    # form below wraps the locate and the WKB predicate in a when(), and
     # Spark extracts python UDFs from BOTH branches — every row would pay
     # the per-row WKB predicate too, and geom_wkb's producing UDF could
     # never be pruned from the scan.
@@ -266,7 +250,7 @@ def _refine(df: DataFrame, qp: QueryPlan) -> DataFrame:
     else:
         exact = UDFS[f"st_{pred}"](geom, qwkb)
 
-    # point-row ray-cast fast path: x/y only, no WKB decode. For a point,
+    # point-row locate fast path: x/y only, no WKB decode. For a point,
     # intersects/within/contains-by-query/covers against an areal query all
     # reduce to point-in-polygon (boundary counts except for strict contains).
     if (
@@ -280,8 +264,10 @@ def _refine(df: DataFrame, qp: QueryPlan) -> DataFrame:
         is_point = (F.col("minx") == F.col("maxx")) & (F.col("miny") == F.col("maxy"))
         exact = F.when(is_point, pip(F.col("x"), F.col("y"))).otherwise(exact)
 
-    if qp.predicate == "intersects" and qp.bboxes and _is_rectangle(qp.geometry):
-        b = qp.bboxes[0]
+    # a solid rectangular query makes "envelope inside the rectangle" exact
+    # for intersects, so those rows skip the UDF
+    b = alg.solid_rect_bounds(qp.geometry) if pred == "intersects" else None
+    if b is not None:
         contained = (
             (F.col("minx") >= F.lit(b[0]))
             & (F.col("maxx") <= F.lit(b[2]))

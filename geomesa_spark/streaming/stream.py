@@ -293,7 +293,7 @@ def geofence_transitions(
     State per entity is ONE long (inside-set bitmask) + a timestamp —
     bounded by the live-entity count, with an idle TTL eviction
     (applyInPandasWithState ProcessingTimeTimeout). Membership tests run
-    vectorized per micro-batch (one ray cast per fence over the whole
+    vectorized per micro-batch (one locate per fence over the whole
     entity batch, boundary-inclusive); events are applied in event-time
     order within the batch. An entity's FIRST appearance inside a fence
     emits 'enter' (the unknown->inside transition is observable)."""
@@ -308,7 +308,8 @@ def geofence_transitions(
         TimestampType,
     )
 
-    from ..geom.vectorized import points_in_polygon
+    from ..geom.algorithms import EXTERIOR
+    from ..geom.vectorized import locate_batch
     from ..geom.wkb import from_wkb, to_wkb
     from ..geom.wkt import from_wkt
 
@@ -341,9 +342,7 @@ def geofence_transitions(
         ys = rows["y"].to_numpy(dtype=float)
         tss = rows["ts"].tolist()
         geoms = [from_wkb(b) for b in fence_wkbs]
-        member = [
-            points_in_polygon(xs, ys, g, boundary_ok=True) for g in geoms
-        ]
+        member = [locate_batch(xs, ys, g) != EXTERIOR for g in geoms]
         mask = int(state.get[0]) if state.exists else 0
         out = {c: [] for c in ("user_id", "fence_id", "event", "ts", "x", "y")}
         for i in range(len(xs)):

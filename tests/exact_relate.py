@@ -388,9 +388,8 @@ class XMultiPoly:
     """MULTIPOLYGON of convex parts with pairwise DISJOINT CLOSURES (no
     touching) — then interior(A) = union of part interiors and boundary(A)
     = union of rings, so every 9IM entry decomposes over parts (the
-    fixture generator enforces separation). This is exactly the valid
-    'archipelago' shape the engine's _parts_batch_safe guard keeps on the
-    batch kernels."""
+    fixture generator enforces separation): the valid 'archipelago'
+    shape."""
 
     dim = 2
 
@@ -427,8 +426,6 @@ class XTouchMultiPoly:
     concave-simple, holed) with pairwise-DISJOINT INTERIORS but TOUCHING
     closures — corner contacts, vertex-on-edge T-contacts, and collinear
     shared edge runs, including a part nested inside a sibling's hole.
-    This is exactly the shape family the engine's `_parts_batch_safe`
-    guard routes OFF the batch kernels onto the scalar relate path.
 
     Interior-disjointness is verified EXACTLY: the signed-part pairwise
     clip area between any two parts must be zero (boundary contact is

@@ -1,23 +1,17 @@
-"""Vectorized areal x areal containment refine (round-4 item #3).
-
-areal_covers_batch / areal_within_batch decide closed-set covers/within
-(and contains, identical to covers for non-degenerate areal pairs) with
-ray casts over vertex+midpoint probe sets + proper-crossing tests + hole
-intrusion probes — removing the per-pair-Python long tail spatial joins
-previously paid for contains/within/covers on non-rectangular polygons.
-Parity is pinned against the exact per-pair DE-9IM kernel."""
+"""Areal x areal containment / overlap / touch verdicts through the join
+refine (`_pairwise_predicate_fn`): golden cases pin each expected verdict,
+and join row-SET parity pins the refine against the exact per-pair DE-9IM
+kernel. Solid-rectangle pairs answer from bounds; other areal pairs take
+the scalar relate for every predicate except intersects."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from geomesa_spark.geom import algorithms as alg
-from geomesa_spark.geom.vectorized import (
-    areal_covers_batch,
-    areal_within_batch,
-)
+from geomesa_spark.geom.wkb import to_wkb
 from geomesa_spark.geom.wkt import from_wkt
-from geomesa_spark.operators.spatial_join import spatial_join
+from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn, spatial_join
 from geomesa_spark.sources.docs import DOCS_SCHEMA, index_docs
 
 
@@ -27,6 +21,15 @@ def _star(cx, cy, radii, rot=0.0):
     pts = [(cx + r * np.cos(a), cy + r * np.sin(a)) for r, a in zip(radii, ang)]
     pts.append(pts[0])
     return "POLYGON ((" + ", ".join(f"{x:.6f} {y:.6f}" for x, y in pts) + "))"
+
+
+def _refine(predicate, a, b) -> bool:
+    """One (a, b) pair through the join refine function, on WKB."""
+    got = _pairwise_predicate_fn(predicate)(
+        pd.Series([bytes(to_wkb(a))], dtype=object),
+        pd.Series([bytes(to_wkb(b))], dtype=object),
+    )
+    return bool(got[0])
 
 
 HOLED = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))"
@@ -49,8 +52,7 @@ CONCAVE_L = "POLYGON ((0 0, 6 0, 6 2, 2 2, 2 6, 0 6, 0 0))"
         (CONCAVE_L, "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))", False),  # pokes notch
         # shared-edge containment (B against A's inner wall)
         ("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", True),
-        # B escapes through A's boundary vertex (improper crossing):
-        # midpoint probe catches it
+        # B escapes through A's boundary vertex (improper crossing)
         ("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))", "POLYGON ((2 2, 6 6, 2 6, 2 2))", False),
         # disjoint / overlapping
         ("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", "POLYGON ((5 5, 6 5, 6 6, 5 6, 5 5))", False),
@@ -63,42 +65,14 @@ CONCAVE_L = "POLYGON ((0 0, 6 0, 6 2, 2 2, 2 6, 0 6, 0 0))"
 )
 def test_covers_within_golden_cases(a_wkt, b_wkt, expect_covers):
     A, B = from_wkt(a_wkt), from_wkt(b_wkt)
-    # batch(A covers B) via both entry points
-    assert bool(areal_covers_batch([A], B)[0]) is expect_covers
-    assert bool(areal_within_batch([B], A)[0]) is expect_covers
+    # the join refine, through every containment entry point
+    assert _refine("covers", A, B) is expect_covers
+    assert _refine("within", B, A) is expect_covers
+    assert _refine("contains", A, B) is expect_covers
     # kernel agreement (sanity on the golden truth)
     assert alg.covers(A, B) is expect_covers
     assert alg.within(B, A) is expect_covers
     assert alg.contains(A, B) is expect_covers
-
-
-def test_random_star_parity_all_containment_predicates():
-    """400 random concave-star pairs, nested scales so containment is
-    non-vacuous: batch verdicts == per-pair kernel for covers AND within."""
-    rng = np.random.default_rng(21)
-    rights = [
-        from_wkt(_star(0, 0, rng.uniform(3, 6, size=9), rot=rng.uniform(0, 3))),
-        from_wkt(HOLED),
-        from_wkt(CONCAVE_L),
-        from_wkt(BIG),
-    ]
-    lefts = []
-    for _ in range(100):
-        cx, cy = rng.uniform(-3, 6, size=2)
-        lefts.append(
-            from_wkt(_star(cx, cy, rng.uniform(0.3, 3.0, size=7), rot=rng.uniform(0, 3)))
-        )
-    n_cov = n_win = 0
-    for B in rights:
-        got_c = areal_covers_batch(lefts, B)
-        want_c = np.array([alg.covers(A, B) for A in lefts])
-        assert (got_c == want_c).all(), np.nonzero(got_c != want_c)
-        got_w = areal_within_batch(lefts, B)
-        want_w = np.array([alg.within(A, B) for A in lefts])
-        assert (got_w == want_w).all(), np.nonzero(got_w != want_w)
-        n_cov += int(want_c.sum())
-        n_win += int(want_w.sum())
-    assert n_win > 10, "within fixture must be non-vacuous"
 
 
 def _poly_doc(doc_id, wkt):
@@ -155,36 +129,7 @@ def test_concave_containment_join_row_parity(spark, predicate):
     assert got == want
 
 
-def test_containment_batch_50k_scale_shape():
-    """50k concave lefts vs a concave right through the batch decider: one
-    vectorized pass (concatenated probe ray cast + chunked crossing test),
-    sampled parity vs the kernel. Per-pair Python at this size would be
-    minutes; the batch completes in seconds."""
-    import time as _t
-
-    rng = np.random.default_rng(33)
-    B = from_wkt(_star(0, 0, rng.uniform(2, 5, size=9), rot=0.4))
-    lefts = []
-    for _ in range(50_000):
-        cx, cy = rng.uniform(-6, 6, size=2)
-        r = rng.uniform(0.05, 1.2)
-        lefts.append(
-            from_wkt(_star(cx, cy, rng.uniform(0.5 * r, r, size=6), rot=rng.uniform(0, 3)))
-        )
-    t0 = _t.time()
-    got_w = areal_within_batch(lefts, B)
-    got_c = areal_covers_batch(lefts, B)
-    elapsed = _t.time() - t0
-    assert got_w.sum() > 100, "within fixture must be non-vacuous"
-    idx = rng.choice(50_000, size=300, replace=False)
-    for i in idx:
-        assert bool(got_w[i]) == alg.within(lefts[i], B), i
-        assert bool(got_c[i]) == alg.covers(lefts[i], B), i
-    # loose wall guard only to catch an accidental per-pair regression
-    assert elapsed < 120, elapsed
-
-
-# -------------------------------------- overlaps / touches batch deciders
+# ------------------------------------------------- overlaps / touches
 
 
 @pytest.mark.parametrize(
@@ -211,54 +156,19 @@ def test_containment_batch_50k_scale_shape():
     ],
 )
 def test_overlaps_touches_golden(a_wkt, b_wkt, want_overlaps, want_touches):
-    from geomesa_spark.geom.vectorized import (
-        areal_overlaps_batch,
-        areal_touches_batch,
-    )
-
     A, B = from_wkt(a_wkt), from_wkt(b_wkt)
-    assert bool(areal_overlaps_batch([A], B)[0]) is want_overlaps
-    assert bool(areal_touches_batch([A], B)[0]) is want_touches
+    assert _refine("overlaps", A, B) is want_overlaps
+    assert _refine("touches", A, B) is want_touches
     # kernel agreement
     assert alg.overlaps(A, B) is want_overlaps
     assert alg.touches(A, B) is want_touches
 
 
-def test_overlaps_touches_random_star_parity():
-    from geomesa_spark.geom.vectorized import (
-        areal_overlaps_batch,
-        areal_touches_batch,
-    )
-
-    rng = np.random.default_rng(27)
-    rights = [
-        from_wkt(_star(0, 0, rng.uniform(2, 5, size=9), rot=rng.uniform(0, 3))),
-        from_wkt(HOLED),
-        from_wkt(BIG),
-    ]
-    lefts = []
-    for _ in range(80):
-        cx, cy = rng.uniform(-4, 8, size=2)
-        lefts.append(
-            from_wkt(_star(cx, cy, rng.uniform(0.4, 3.0, size=7), rot=rng.uniform(0, 3)))
-        )
-    n_ov = 0
-    for B in rights:
-        got_o = areal_overlaps_batch(lefts, B)
-        want_o = np.array([alg.overlaps(A, B) for A in lefts])
-        assert (got_o == want_o).all(), np.nonzero(got_o != want_o)
-        got_t = areal_touches_batch(lefts, B)
-        want_t = np.array([alg.touches(A, B) for A in lefts])
-        assert (got_t == want_t).all(), np.nonzero(got_t != want_t)
-        n_ov += int(want_o.sum())
-    assert n_ov > 20, "overlaps fixture must be non-vacuous"
-
-
 @pytest.mark.parametrize("predicate", ["overlaps", "touches", "crosses"])
 def test_overlaps_touches_join_row_parity(spark, predicate):
-    """overlaps/touches/crosses joins route through the batch deciders with
-    row-SET parity vs the kernel (crosses is vacuously empty for areal
-    pairs — asserted non-vacuous for the other two)."""
+    """overlaps/touches/crosses joins: row-SET parity vs the kernel
+    (crosses is vacuously empty for areal pairs — overlaps is asserted
+    non-vacuous)."""
     rng = np.random.default_rng(14)
     left_rows, lgeos = [], {}
     for i in range(80):

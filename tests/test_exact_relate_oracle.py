@@ -419,10 +419,9 @@ def _soup(rng: np.random.Generator, n: int):
             ]
             wkt = "POLYGON ((" + ", ".join(f"{x} {y}" for x, y in ring) + "))"
             out.append((wkt, XSimplePoly(ring)))
-        elif kind < 25:  # touching-closure rect pair (r8: exactly the shape
-            # family _parts_batch_safe routes onto the scalar relate path):
-            # corner contact, vertex-on-edge T contact, or a collinear
-            # shared-edge run (engine min-locate convention on the run)
+        elif kind < 25:  # touching-closure rect pair (r8): corner
+            # contact, vertex-on-edge T contact, or a collinear shared-edge
+            # run (engine min-locate convention on the run)
             x0, y0 = int(rng.integers(0, 2)), int(rng.integers(0, 2))
             w, h = int(rng.integers(1, 3)), int(rng.integers(1, 3))
             r1 = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]

@@ -283,17 +283,16 @@ def test_clip_line_by_polygon():
 def test_vectorized_points_in_polygon():
     xs = np.array([5.0, 0.0, 0.0, -5.0])
     ys = np.array([5.0, 5.0, 0.0, 0.0])
-    contains_mask = vec.points_in_polygon(xs, ys, BOX_REF, boundary_ok=False)
-    assert list(contains_mask) == [True, False, False, False]
-    inter_mask = vec.points_in_polygon(xs, ys, BOX_REF, boundary_ok=True)
-    assert list(inter_mask) == [True, True, True, False]
+    loc = vec.locate_batch(xs, ys, BOX_REF)
+    assert list(loc == alg.INTERIOR) == [True, False, False, False]
+    assert list(loc != alg.EXTERIOR) == [True, True, True, False]
 
 
 def test_vectorized_matches_scalar():
     rng = np.random.default_rng(42)
     xs = rng.uniform(-2, 12, 500)
     ys = rng.uniform(-2, 12, 500)
-    mask = vec.points_in_polygon(xs, ys, BOX_REF, boundary_ok=True)
+    mask = vec.locate_batch(xs, ys, BOX_REF) != alg.EXTERIOR
     for i in range(0, 500, 17):
         assert mask[i] == alg.intersects(point(xs[i], ys[i]), BOX_REF)
 
@@ -346,10 +345,11 @@ def test_concave_intersection_area():
     rng = np.random.default_rng(42)
     xs = rng.uniform(0, 4, 4000)
     ys = rng.uniform(0, 4, 4000)
-    inside_both = vec.points_in_polygon(xs, ys, L1, True) & vec.points_in_polygon(
-        xs, ys, L2, True
-    )
-    inside_inter = vec.points_in_polygon(xs, ys, inter, True)
+    def inside(g):
+        return vec.locate_batch(xs, ys, g) != alg.EXTERIOR
+
+    inside_both = inside(L1) & inside(L2)
+    inside_inter = inside(inter)
     assert (inside_both == inside_inter).mean() > 0.995
 
 

@@ -277,17 +277,32 @@ def test_lines_vs_lines_join_row_parity(spark):
 
 
 def test_point_locate_fast_paths():
-    """locate_batch mirrors algorithms.locate exactly for the point-left
-    touches/intersects/within extensions (areal AND lineal rights)."""
+    """locate_batch mirrors algorithms.locate exactly — the one vectorized
+    point-location kernel behind the join's point fast path, the planner's
+    point refine, density fills and geofences (areal, lineal, point and
+    collection targets)."""
     rng = np.random.default_rng(13)
     targets = [
         from_wkt(HOLED),
         from_wkt("LINESTRING (0 0, 4 0, 4 4)"),
         from_wkt("MULTILINESTRING ((0 0, 2 0), (5 5, 6 6))"),
+        # overlapping parts (invalid OGC): union semantics, interior wins
+        from_wkt("MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((2 2, 6 2, 6 6, 2 6, 2 2)))"),
+        # doubled corner: a triangle whose vertices all sit on bbox corners
+        from_wkt("POLYGON ((0 0, 1 0, 1 1, 1 1, 0 0))"),
+        from_wkt("MULTIPOINT ((0 0), (5 5))"),
+        from_wkt(
+            "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), "
+            "LINESTRING (2 0, 4 0), POINT (5 5))"
+        ),
     ]
-    px = np.concatenate([rng.uniform(-2, 12, 200), np.array([0.0, 4.0, 2.0, 5.0, 3.0])])
-    py = np.concatenate([rng.uniform(-2, 12, 200), np.array([0.0, 0.0, 0.0, 5.0, 3.0])])
+    rx = np.concatenate([rng.uniform(-2, 12, 200), np.array([0.0, 4.0, 2.0, 5.0, 3.0])])
+    ry = np.concatenate([rng.uniform(-2, 12, 200), np.array([0.0, 0.0, 0.0, 5.0, 3.0])])
     for g in targets:
+        # vertex and edge-midpoint probes sit exactly on the boundary
+        segs = alg._line_segments(g)
+        px = np.concatenate([rx, segs[:, 0], (segs[:, 0] + segs[:, 2]) / 2])
+        py = np.concatenate([ry, segs[:, 1], (segs[:, 1] + segs[:, 3]) / 2])
         got = locate_batch(px, py, g)
         want = np.array([alg.locate(float(x), float(y), g) for x, y in zip(px, py)])
         assert (got == want).all(), np.nonzero(got != want)
@@ -414,9 +429,9 @@ def test_refine_fn_degenerate_polygon_sweep():
 
 
 def test_refine_fn_multipoint_sweep():
-    """MULTIPOINT vs areal/lineal partners batch through ONE vectorized
-    locate over member points (multipoint_predicate_batch) — parity vs the
-    scalar kernel on lattice fixtures, both directions, all predicates."""
+    """MULTIPOINT vs areal/lineal partners through the join refine function
+    (scalar relate) — parity vs the scalar kernel on lattice fixtures, both
+    directions, all predicates."""
     from geomesa_spark.geom.wkb import to_wkb
     from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
 
@@ -471,46 +486,17 @@ def test_refine_fn_multipoint_sweep():
     assert not bad, bad[:5]
 
 
-def test_parts_batch_safe_archipelago_routing():
-    """VERDICT r6 #9: a VALID archipelago multipolygon whose part ENVELOPES
-    overlap (interlocking L-shaped islands) must keep the batch kernels —
-    the r6 envelope-touch guard routed it to the scalar path. Overlapping,
-    edge-sharing and interior-nested parts must still route scalar; parts
-    nested in a sibling's HOLE (valid, closures disjoint) stay batched."""
-    from geomesa_spark.geom.wkt import from_wkt
-    from geomesa_spark.operators.spatial_join import _parts_batch_safe
-
+def test_refine_fn_interlocking_multipolygon_parity():
+    """A valid archipelago multipolygon whose part ENVELOPES overlap
+    (interlocking L-shaped islands) through the join refine function vs
+    partners that exercise the containment/overlap/touch family, both
+    directions: intersects batches, the rest take the scalar relate."""
     interlocking = from_wkt(
         # L-shape occupying (0..3, 0..1)+(0..1, 0..3); island at (2 2, 3 3):
         # envelopes overlap, geometries disjoint
         "MULTIPOLYGON (((0 0, 3 0, 3 1, 1 1, 1 3, 0 3, 0 0)), "
         "((2 2, 3 2, 3 3, 2 3, 2 2)))"
     )
-    assert _parts_batch_safe(interlocking) is True
-    separated = from_wkt(
-        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 6 5, 6 6, 5 6, 5 5)))"
-    )
-    assert _parts_batch_safe(separated) is True
-    hole_nested = from_wkt(
-        # island strictly inside the first part's hole: valid, batch-safe
-        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 8 2, 8 8, 2 8, 2 2)), "
-        "((4 4, 6 4, 6 6, 4 6, 4 4)))"
-    )
-    assert _parts_batch_safe(hole_nested) is True
-    overlapping = from_wkt(
-        "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((2 2, 6 2, 6 6, 2 6, 2 2)))"
-    )
-    assert _parts_batch_safe(overlapping) is False
-    edge_sharing = from_wkt(
-        "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)), ((2 0, 4 0, 4 2, 2 2, 2 0)))"
-    )
-    assert _parts_batch_safe(edge_sharing) is False
-    nested = from_wkt(
-        "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0)), ((2 2, 4 2, 4 4, 2 4, 2 2)))"
-    )
-    assert _parts_batch_safe(nested) is False
-    # predicate parity for the newly-batched interlocking shape vs partners
-    # that exercise the containment/overlap/touch family
     from geomesa_spark.geom.wkb import to_wkb
     from geomesa_spark.operators.spatial_join import _pairwise_predicate_fn
 

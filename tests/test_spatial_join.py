@@ -10,7 +10,6 @@ import pytest
 from geomesa_spark.geom import algorithms as alg
 from geomesa_spark.geom.wkt import from_wkt
 from geomesa_spark.operators.spatial_join import (
-    _rect_info,
     _rect_pair_predicate,
     _shuffle_partitions,
     spatial_join,
@@ -110,10 +109,8 @@ def test_rect_pair_predicate_matches_kernel():
     ],
 )
 def test_rect_info_rejects_degenerate_corner_rings(wkt, expect_rect):
-    is_rect, bounds = _rect_info(from_wkt(wkt))
-    assert is_rect is expect_rect
-    if expect_rect:
-        assert bounds == (0.0, 0.0, 1.0, 1.0)
+    bounds = alg.solid_rect_bounds(from_wkt(wkt))
+    assert bounds == ((0.0, 0.0, 1.0, 1.0) if expect_rect else None)
 
 
 def test_salt_probe_tolerates_auto_shuffle_partitions(spark):
@@ -172,52 +169,6 @@ def test_left_outer_spatial_join(spark):
     }
     with pytest.raises(ValueError):
         spatial_join(left, right, how="full")
-
-
-def test_segs_intersect_any_chunked_matches_block(monkeypatch):
-    """_segs_intersect_any bounds per-call broadcast memory: blocks never
-    exceed _SEG_PAIR_BLOCK pairs, early-exits on the first hit, and the
-    chunked answer matches the unchunked one on pathological many-segment
-    part pairs (VERDICT r7 #7)."""
-    from geomesa_spark.operators import spatial_join as sj
-
-    def zigzag(n, y0, amp=0.25):
-        xs = np.linspace(0.0, 100.0, n + 1)
-        ys = y0 + amp * (np.arange(n + 1) % 2)
-        pts = np.stack([xs, ys], axis=1)
-        return np.hstack([pts[:-1], pts[1:]])
-
-    big_a = zigzag(10_000, 0.0)
-    big_far = zigzag(10_000, 50.0)     # disjoint: every block must be scanned
-    big_hit = zigzag(10_000, 0.125, amp=-0.25)  # interleaves -> crosses early
-
-    seen = []
-    real_block = sj._segs_intersect_block
-
-    def spy(A, B):
-        seen.append(len(A) * len(B))
-        return real_block(A, B)
-
-    monkeypatch.setattr(sj, "_segs_intersect_block", spy)
-    assert sj._segs_intersect_any(big_a, big_far) is False
-    n_disjoint_blocks = len(seen)
-    assert n_disjoint_blocks > 1  # it actually chunked
-    assert max(seen) <= sj._SEG_PAIR_BLOCK
-    seen.clear()
-    assert sj._segs_intersect_any(big_a, big_hit) is True
-    assert len(seen) < n_disjoint_blocks  # early exit: far fewer blocks
-    monkeypatch.undo()
-
-    # randomized parity: chunked (tiny block) == one-shot block
-    rng = np.random.default_rng(7)
-    for _ in range(25):
-        A = rng.uniform(0, 10, (17, 4))
-        B = rng.uniform(0, 10, (23, 4))
-        want = sj._segs_intersect_block(A, B)
-        monkeypatch.setattr(sj, "_SEG_PAIR_BLOCK", 16)
-        got = sj._segs_intersect_any(A, B)
-        monkeypatch.undo()
-        assert got == want
 
 
 def test_spatial_join_gc_full_predicate_parity(spark):

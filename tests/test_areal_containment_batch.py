@@ -1,8 +1,9 @@
 """Areal x areal containment / overlap / touch verdicts through the join
 refine (`_pairwise_predicate_fn`): golden cases pin each expected verdict,
-and join row-SET parity pins the refine against the exact per-pair DE-9IM
-kernel. Solid-rectangle pairs answer from bounds; other areal pairs take
-the scalar relate for every predicate except intersects."""
+and random concave-star pairs plus join row-SET parity pin the refine
+against the exact per-pair DE-9IM kernel. Solid-rectangle pairs answer
+from bounds; other areal pairs take the scalar relate for every predicate
+except intersects."""
 
 import numpy as np
 import pandas as pd
@@ -30,6 +31,17 @@ def _refine(predicate, a, b) -> bool:
         pd.Series([bytes(to_wkb(b))], dtype=object),
     )
     return bool(got[0])
+
+
+def _refine_many(predicate, lefts, right) -> np.ndarray:
+    """Every (left, right) pair through the join refine function at once."""
+    return np.asarray(
+        _pairwise_predicate_fn(predicate)(
+            pd.Series([bytes(to_wkb(a)) for a in lefts], dtype=object),
+            pd.Series([bytes(to_wkb(right))] * len(lefts), dtype=object),
+        ),
+        dtype=bool,
+    )
 
 
 HOLED = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (3 3, 7 3, 7 7, 3 7, 3 3))"
@@ -73,6 +85,34 @@ def test_covers_within_golden_cases(a_wkt, b_wkt, expect_covers):
     assert alg.covers(A, B) is expect_covers
     assert alg.within(B, A) is expect_covers
     assert alg.contains(A, B) is expect_covers
+
+
+def test_random_star_parity_all_containment_predicates():
+    """400 random concave-star pairs, nested scales so containment is
+    non-vacuous: refine verdicts == per-pair kernel for covers AND within."""
+    rng = np.random.default_rng(21)
+    rights = [
+        from_wkt(_star(0, 0, rng.uniform(3, 6, size=9), rot=rng.uniform(0, 3))),
+        from_wkt(HOLED),
+        from_wkt(CONCAVE_L),
+        from_wkt(BIG),
+    ]
+    lefts = []
+    for _ in range(100):
+        cx, cy = rng.uniform(-3, 6, size=2)
+        lefts.append(
+            from_wkt(_star(cx, cy, rng.uniform(0.3, 3.0, size=7), rot=rng.uniform(0, 3)))
+        )
+    n_win = 0
+    for B in rights:
+        got_c = _refine_many("covers", lefts, B)
+        want_c = np.array([alg.covers(A, B) for A in lefts])
+        assert (got_c == want_c).all(), np.nonzero(got_c != want_c)
+        got_w = _refine_many("within", lefts, B)
+        want_w = np.array([alg.within(A, B) for A in lefts])
+        assert (got_w == want_w).all(), np.nonzero(got_w != want_w)
+        n_win += int(want_w.sum())
+    assert n_win > 10, "within fixture must be non-vacuous"
 
 
 def _poly_doc(doc_id, wkt):
@@ -162,6 +202,31 @@ def test_overlaps_touches_golden(a_wkt, b_wkt, want_overlaps, want_touches):
     # kernel agreement
     assert alg.overlaps(A, B) is want_overlaps
     assert alg.touches(A, B) is want_touches
+
+
+def test_overlaps_touches_random_star_parity():
+    rng = np.random.default_rng(27)
+    rights = [
+        from_wkt(_star(0, 0, rng.uniform(2, 5, size=9), rot=rng.uniform(0, 3))),
+        from_wkt(HOLED),
+        from_wkt(BIG),
+    ]
+    lefts = []
+    for _ in range(80):
+        cx, cy = rng.uniform(-4, 8, size=2)
+        lefts.append(
+            from_wkt(_star(cx, cy, rng.uniform(0.4, 3.0, size=7), rot=rng.uniform(0, 3)))
+        )
+    n_ov = 0
+    for B in rights:
+        got_o = _refine_many("overlaps", lefts, B)
+        want_o = np.array([alg.overlaps(A, B) for A in lefts])
+        assert (got_o == want_o).all(), np.nonzero(got_o != want_o)
+        got_t = _refine_many("touches", lefts, B)
+        want_t = np.array([alg.touches(A, B) for A in lefts])
+        assert (got_t == want_t).all(), np.nonzero(got_t != want_t)
+        n_ov += int(want_o.sum())
+    assert n_ov > 20, "overlaps fixture must be non-vacuous"
 
 
 @pytest.mark.parametrize("predicate", ["overlaps", "touches", "crosses"])

@@ -56,6 +56,70 @@ def attach(spark):
     return spark
 
 
+def _lazy_zip_invalidation():
+    """Inside a Python worker on CPython < 3.13, re-read a zip archive's
+    directory on importlib.invalidate_caches() only when the archive changed.
+
+    PySpark's worker ends setup_spark_files with importlib.invalidate_caches()
+    on every task, and before 3.13 zipimporter.invalidate_caches re-parses
+    the archive's whole central directory in pure Python, once per cached
+    importer: the spark-core jar x2, pyspark.zip x12-14, py4j x2 and this
+    package's zip x5-8, about 30k entries and 0.1-0.6 s before each task's UDF
+    runs. CPython 3.13 reads zipimporter's files through
+    _zip_directory_cache and only pops the entry on invalidation; this does
+    the same with one difference: the entry stays filled (pkgutil's
+    iter_zipimport_modules indexes _zip_directory_cache[archive] directly)
+    and is re-read when the archive's (st_size, st_mtime_ns) differs from
+    the one it was read at. The driver's interpreter is left as it is."""
+    import sys
+
+    if sys.version_info >= (3, 13):
+        return
+    from pyspark import TaskContext
+
+    if TaskContext.get() is None:
+        return
+    import os
+    import zipimport
+
+    cache = zipimport._zip_directory_cache
+
+    def stamp(path):
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        return st.st_size, st.st_mtime_ns
+
+    # this task's setup_spark_files re-read every cached archive just now
+    read_at = {path: stamp(path) for path in cache}
+
+    def read(path, st):
+        try:
+            files = cache[path] = zipimport._read_directory(path)
+        except zipimport.ZipImportError:
+            cache.pop(path, None)
+            return {}
+        read_at[path] = st
+        return files
+
+    def files(self):
+        try:
+            return cache[self.archive]
+        except KeyError:
+            return read(self.archive, stamp(self.archive))
+
+    def invalidate_caches(self):
+        st = stamp(self.archive)
+        if st is None or read_at.get(self.archive) != st or self.archive not in cache:
+            read(self.archive, st)
+
+    # zipimporter.__init__ stores the directory in the cache before it
+    # assigns self._files, so the setter has nothing left to keep
+    zipimport.zipimporter._files = property(files, lambda self, value: None)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def init_sql(spark):
     """Register all st_* functions on a SparkSession (the analog of
     geomesa_pyspark.init_sql / SparkSession.withJTS) and ship the package
@@ -63,3 +127,6 @@ def init_sql(spark):
     attach(spark)
     _register_functions(spark)
     return spark
+
+
+_lazy_zip_invalidation()

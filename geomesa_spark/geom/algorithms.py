@@ -1571,7 +1571,10 @@ def buffer_point_geodesic(lon: float, lat: float, meters: float, n: int = 100) -
 
 def antimeridian_safe(g: Geometry) -> Geometry:
     """Split/translate geometries crossing the international date line
-    (GeometricProcessingFunctions.scala:41-57)."""
+    (GeometricProcessingFunctions.scala:41-57). Areal input comes back
+    polygonal, or as a GEOMETRYCOLLECTION of the polygons followed by the
+    split line and point members when a collection has any; lineal and
+    puntal input come back as their split pieces."""
     minx, miny, maxx, maxy = g.bounds()
     if minx >= -180 and maxx <= 180:
         return g
@@ -1579,21 +1582,24 @@ def antimeridian_safe(g: Geometry) -> Geometry:
 
     world = _box(-180, -90, 180, 90)
     parts = []
+    rest = []  # line and point members of an areal collection
     for shift in (0.0, 360.0, -360.0):
         shifted = translate(g, shift, 0.0) if shift else g
         smin, _, smax, _ = shifted.bounds()
         if smax < -180 or smin > 180:
             continue
         piece = intersection(shifted, world)
-        if not piece.is_empty() and piece.dimension() == g.dimension():
-            parts.extend(_polygons_of(piece) or [])
-            if g.dimension() == 1:
-                parts.append(piece)
+        if piece.is_empty():
+            continue
+        if g.dimension() == 2:
+            parts.extend(_polygons_of(piece))
+            rest.extend(Geometry(LINESTRING, a) for a in _lines_of(piece))
+            rest.extend(Geometry(POINT, p) for p in _points_of(piece))
+        elif piece.dimension() == g.dimension():
+            parts.append(piece)
     if g.dimension() == 2:
-        polys = [p for p in parts]
-        if len(polys) == 1:
-            return Geometry(POLYGON, polys[0])
-        return Geometry(MULTIPOLYGON, polys)
+        areal = Geometry(POLYGON, parts[0]) if len(parts) == 1 else Geometry(MULTIPOLYGON, parts)
+        return Geometry(GEOMETRYCOLLECTION, [areal, *rest]) if rest else areal
     if len(parts) == 1:
         return parts[0]
     return Geometry(GEOMETRYCOLLECTION, parts)

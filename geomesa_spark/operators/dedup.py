@@ -614,16 +614,7 @@ def _gather(df: DataFrame, nbytes: int, id_col: str | None = None):
         cap = _GATHER_MAX_BYTES
     if nbytes > cap:
         return None
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        pdf = df.toPandas()
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    pdf = df.toArrow().to_pandas()
     if id_col is not None and pdf[id_col].duplicated().any():
         return None
     return pdf

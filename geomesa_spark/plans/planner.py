@@ -17,8 +17,12 @@ Plan shape per query:
   3. envelope overlap compare        (whole-stage codegen, row-group stats)
   4. z2 BETWEEN ranges (optional)    (sorted-data locality)
   5. exact refine: skipped when envelope logic is exact ("loose bbox",
-     Z3IndexKeySpace.useFullFilter:240-254), else a pandas UDF on the
-     boundary rows only (fully-contained envelopes short-circuit TRUE).
+     Z3IndexKeySpace.useFullFilter:240-254), else a pandas UDF evaluated on
+     EVERY row that passes 1-4. Spark's ExtractPythonUDFs moves each python
+     UDF of the filter (the point locate and the WKB predicate) into one
+     ArrowEvalPython below it, so the CASE WHEN that picks a row's verdict
+     (fully-contained envelope -> TRUE, point -> locate, else predicate)
+     runs after both UDFs saw the row; it decides, it does not prune.
 """
 
 from __future__ import annotations
@@ -211,11 +215,16 @@ def _pip_udf(geometry: Geometry, boundary_ok: bool):
 
 
 def _refine(df: DataFrame, qp: QueryPlan) -> DataFrame:
-    """Exact-geometry refine with a fully-contained-envelope short-circuit:
-    rows whose envelope is strictly inside the query bbox are TRUE for
-    intersects without touching the UDF (loose-bbox optimization,
-    Z3IndexKeySpace.useFullFilter:240-254). Point rows vs an areal query use
-    the vectorized locate on x/y; only extent rows decode WKB."""
+    """Exact-geometry refine of the rows that passed the envelope prefilter.
+    The verdict is picked per row by a CASE WHEN: a row whose envelope is
+    inside a solid rectangular query is TRUE for intersects (loose-bbox
+    rule, Z3IndexKeySpace.useFullFilter:240-254), a point row takes the
+    vectorized x/y locate, any other row the WKB predicate. Spark evaluates
+    python UDFs before the condition that uses them (one ArrowEvalPython
+    under the filter, explain("formatted")), so the locate and the WKB
+    predicate both run on EVERY prefiltered row; the CASE only chooses
+    between their results. The all-points form below has one UDF and no
+    CASE."""
     from ..functions.library import UDFS
 
     qwkb = F.lit(bytearray(to_wkb(qp.geometry)))
@@ -265,7 +274,7 @@ def _refine(df: DataFrame, qp: QueryPlan) -> DataFrame:
         exact = F.when(is_point, pip(F.col("x"), F.col("y"))).otherwise(exact)
 
     # a solid rectangular query makes "envelope inside the rectangle" exact
-    # for intersects, so those rows skip the UDF
+    # for intersects; the UDF results of those rows are computed but unused
     b = alg.solid_rect_bounds(qp.geometry) if pred == "intersects" else None
     if b is not None:
         contained = (

@@ -1,14 +1,16 @@
 #!/usr/bin/env python
-"""Build dist/geomesa_spark.zip for spark-submit --py-files."""
+"""Build geomesa_spark.zip for spark-submit --py-files.
+
+Usage: python scripts/build_pyfiles.py [OUT]   (OUT defaults to dist/geomesa_spark.zip)"""
 
 import os
+import sys
 import zipfile
 
 root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 pkg = os.path.join(root, "geomesa_spark")
-dist = os.path.join(root, "dist")
-os.makedirs(dist, exist_ok=True)
-out = os.path.join(dist, "geomesa_spark.zip")
+out = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else os.path.join(root, "dist", "geomesa_spark.zip")
+os.makedirs(os.path.dirname(out), exist_ok=True)
 with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
     for r, _dirs, files in os.walk(pkg):
         for f in files:

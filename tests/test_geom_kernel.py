@@ -264,6 +264,42 @@ def test_antimeridian_safe_polygon():
     assert not alg.intersects(safe, from_wkt("POINT(0 55)"))
 
 
+def test_antimeridian_safe_keeps_line_and_point_members():
+    """An areal collection crossing the seam keeps its split line and point
+    members next to the split polygons, not the polygons alone."""
+    g = from_wkt(
+        "GEOMETRYCOLLECTION (POLYGON ((170 0, 190 0, 190 10, 170 10, 170 0)), "
+        "LINESTRING (175 20, 185 20), POINT (185 30))"
+    )
+    safe = alg.antimeridian_safe(g)
+    assert to_wkt(safe) == (
+        "GEOMETRYCOLLECTION (MULTIPOLYGON (((170 0, 180 0, 180 10, 170 10, 170 0)), "
+        "((-180 0, -170 0, -170 10, -180 10, -180 0))), "
+        "LINESTRING (175 20, 180 20), LINESTRING (-180 20, -175 20), POINT (-175 30))"
+    )
+    assert from_wkb(to_wkb(safe)).gtype == safe.gtype
+    assert abs(alg.area(safe) - alg.area(g)) < 1e-9
+    # a polygon that stays east of the seam with a line that crosses it
+    g = from_wkt(
+        "GEOMETRYCOLLECTION (POLYGON ((170 0, 179 0, 179 10, 170 10, 170 0)), "
+        "LINESTRING (175 20, 185 20))"
+    )
+    assert to_wkt(alg.antimeridian_safe(g)) == (
+        "GEOMETRYCOLLECTION (POLYGON ((170 0, 179 0, 179 10, 170 10, 170 0)), "
+        "LINESTRING (175 20, 180 20), LINESTRING (-180 20, -175 20))"
+    )
+    # polygons only: the result stays polygonal
+    poly = from_wkt("GEOMETRYCOLLECTION (POLYGON ((170 0, 190 0, 190 10, 170 10, 170 0)))")
+    assert alg.antimeridian_safe(poly).gtype == 6  # MultiPolygon
+
+
+def test_antimeridian_safe_keeps_points():
+    g = from_wkt("MULTIPOINT ((175 20), (185 20))")
+    assert to_wkt(alg.antimeridian_safe(g)) == (
+        "GEOMETRYCOLLECTION (POINT (175 20), POINT (-175 20))"
+    )
+
+
 def test_intersection_boxes():
     g = alg.intersection(BOX_REF, box(5, 5, 15, 15))
     assert alg.area(g) == 25.0

@@ -4,11 +4,13 @@ multi-executor clusters). Shells out to the real launcher."""
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
 SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+ROOT = Path(__file__).resolve().parents[1]  # the checkout this test belongs to
 
 
 @pytest.mark.skipif(not shutil.which("spark-submit") and not shutil.os.path.exists("/opt/spark/bin/spark-submit"), reason="no spark-submit")
@@ -17,14 +19,15 @@ def test_submit_index_and_filter(spark, tmp_path):
 
     docs_path = str(tmp_path / "docs")
     synth_docs(spark, 200).write.mode("overwrite").parquet(docs_path)
-    subprocess.run([sys.executable, "scripts/build_pyfiles.py"], check=True, cwd="/root/repo")
+    pyfiles = str(tmp_path / "geomesa_spark.zip")
+    subprocess.run([sys.executable, str(ROOT / "scripts" / "build_pyfiles.py"), pyfiles], check=True)
 
     idx_path = str(tmp_path / "indexed")
     r = subprocess.run(
         [
             SUBMIT, "--master", "local[2]",
-            "--py-files", "/root/repo/dist/geomesa_spark.zip",
-            "/root/repo/scripts/submit_job.py",
+            "--py-files", pyfiles,
+            str(ROOT / "scripts" / "submit_job.py"),
             "--job", "index", "--input", docs_path, "--output", idx_path,
         ],
         capture_output=True, text=True, timeout=300,
@@ -35,8 +38,8 @@ def test_submit_index_and_filter(spark, tmp_path):
     r = subprocess.run(
         [
             SUBMIT, "--master", "local[2]",
-            "--py-files", "/root/repo/dist/geomesa_spark.zip",
-            "/root/repo/scripts/submit_job.py",
+            "--py-files", pyfiles,
+            str(ROOT / "scripts" / "submit_job.py"),
             "--job", "filter", "--input", idx_path,
             "--geometry", "POLYGON((-40 -40, -40 40, 40 40, 40 -40, -40 -40))",
             "--output", hits_path,
